@@ -1,4 +1,4 @@
-"""Boolean predicates (reference P1, P3-P6, P9).
+"""Boolean predicates (reference P1, P3-P6).
 
 Host-class regexes reproduced verbatim from
 apps-scripts/code-LLM-intergration.js:281-294; generic-title stoplist
@@ -54,8 +54,3 @@ def is_generic_title(s: Column) -> Column:
     isGenericTitle_, code-LLM-intergration.js:301-313)."""
     t = F.lower(F.trim(F.coalesce(s, F.lit(""))))
     return (F.length(t) <= 2) | t.rlike(GENERIC_TITLE_RE)
-
-
-def in_sheet_whitelist(sheet: Column, whitelist: list[str]) -> Column:
-    """reference P9 (code-Extractor-withoutLLM.js:16,85)."""
-    return sheet.isin(whitelist)

@@ -2,16 +2,19 @@
 apps-scripts/code-LLM-intergration.js:439-480).
 
 The reference branches per row (API → direct → renderer → aggregator
-unwrap → last resort). Here each tier is a DataFrame pass over the
-SHRINKING SUBSET that still needs work, then one union — the
-set-at-a-time spelling of the same cheap→expensive cost model. Each
-tier's UDF output is cached so deriving the remainder subset never
-re-fires the side-effecting fetch (SURVEY §4 'tiered execution').
+unwrap → last resort). Here the cascade is ONE linear chain of
+projections: each tier's UDF takes a boolean gate column computed in
+the JVM from the earlier tiers' outputs, and a row whose gate is false
+gets the UDF's empty result without a client call. Spark evaluates
+each Python UDF once per row in its own extracted node, so the gate —
+applied inside the UDF, not in a `when()` whose branches Catalyst may
+both evaluate — skips the call with no per-tier cache, filter or
+union. Each result column is then one CASE over the tier outcomes.
 
 HTTP happens in Arrow-batched pandas UDFs marked nondeterministic
-(so Catalyst won't re-execute or reorder them past filters); the ATS
-href unwrap scan is pure JVM regex. At scale each tier fans out per
-partition; per-executor rate limiting would live inside the client.
+(so Catalyst won't re-execute or reorder them); the ATS href unwrap
+scan is pure JVM regex. At scale the chain runs per partition in a
+single stage; per-executor rate limiting would live inside the client.
 """
 
 from __future__ import annotations
@@ -97,53 +100,69 @@ def _api_fetch_one(client, url: str):
     return (0, 0, "", "", "", "")
 
 
+def _gated(urls: pd.Series, gate: pd.Series, call, empty: tuple, columns) -> pd.DataFrame:
+    """Rows of call(url) where the gate holds, else ``empty``: a false
+    gate makes no client call."""
+    rows = [call(u) if g else empty for u, g in zip(urls, gate)]
+    return pd.DataFrame(rows, columns=columns)
+
+
+# a gated-off tier's result: no API hit, no page, no error
+_NO_API = (0, 0, "", "", "", "", None)
+_NO_PAGE = (0, None, None, None)
+
+
 def make_api_udf(client):
-    """Client exceptions surface in 'err' (the reference lets
-    UrlFetchApp throws propagate to the item-level catch → Status
-    error, :915-918); dead-lettering is the caller's job."""
+    """api_udf(url, gate). Client exceptions surface in 'err' (the
+    reference lets UrlFetchApp throws propagate to the item-level
+    catch → Status error, :915-918); dead-lettering is the caller's
+    job."""
+
+    def call(u):
+        try:
+            return _api_fetch_one(client, u) + (None,)
+        except Exception as e:  # noqa: BLE001
+            return (0, 0, "", "", "", "", str(e)[:300])
 
     @pandas_udf(API_SCHEMA)
-    def api_fetch(urls: pd.Series) -> pd.DataFrame:
-        rows = []
-        for u in urls:
-            try:
-                rows.append(_api_fetch_one(client, u) + (None,))
-            except Exception as e:  # noqa: BLE001
-                rows.append((0, 0, "", "", "", "", str(e)[:300]))
-        return pd.DataFrame(rows, columns=[f.name for f in API_SCHEMA.fields])
+    def api_fetch(urls: pd.Series, gate: pd.Series) -> pd.DataFrame:
+        return _gated(urls, gate, call, _NO_API, API_SCHEMA.fieldNames())
 
     return api_fetch.asNondeterministic()
 
 
 def make_http_udf(client):
+    """http_udf(url, gate)."""
+
+    def call(u):
+        try:
+            return tuple(client.fetch(u)) + (None,)
+        except Exception as e:  # noqa: BLE001
+            return (0, None, None, str(e)[:300])
+
     @pandas_udf(FETCH_SCHEMA)
-    def direct_fetch(urls: pd.Series) -> pd.DataFrame:
-        rows = []
-        for u in urls:
-            try:
-                rows.append(tuple(client.fetch(u)) + (None,))
-            except Exception as e:  # noqa: BLE001
-                rows.append((0, None, None, str(e)[:300]))
-        return pd.DataFrame(rows, columns=["status", "final_url", "html", "err"])
+    def direct_fetch(urls: pd.Series, gate: pd.Series) -> pd.DataFrame:
+        return _gated(urls, gate, call, _NO_PAGE, FETCH_SCHEMA.fieldNames())
 
     return direct_fetch.asNondeterministic()
 
 
 def make_render_udf(client):
-    """Renderer failures are ABSORBED as null results, matching the
-    reference (fetchViaRenderer_ returns null on any error,
-    :398-414) — only http/API client errors dead-letter."""
+    """render_udf(url, gate). Renderer failures are ABSORBED as null
+    results, matching the reference (fetchViaRenderer_ returns null
+    on any error, :398-414) — only http/API client errors
+    dead-letter."""
+
+    def call(u):
+        try:
+            r = client.render(u)
+        except Exception:  # noqa: BLE001 — absorbed like the JS null
+            r = None
+        return (tuple(r) if r else (0, None, None)) + (None,)
 
     @pandas_udf(FETCH_SCHEMA)
-    def render_fetch(urls: pd.Series) -> pd.DataFrame:
-        rows = []
-        for u in urls:
-            try:
-                r = client.render(u)
-            except Exception:  # noqa: BLE001 — absorbed like the JS null
-                r = None
-            rows.append((tuple(r) if r else (0, None, None)) + (None,))
-        return pd.DataFrame(rows, columns=["status", "final_url", "html", "err"])
+    def render_fetch(urls: pd.Series, gate: pd.Series) -> pd.DataFrame:
+        return _gated(urls, gate, call, _NO_PAGE, FETCH_SCHEMA.fieldNames())
 
     return render_fetch.asNondeterministic()
 
@@ -155,20 +174,6 @@ def first_ats_link(html) -> F.Column:
     ats = F.filter(hrefs, lambda u: is_ats_host(host_from_url(u)))
     # try_element_at: ANSI mode makes element_at throw on empty arrays
     return F.try_element_at(ats, F.lit(1))
-
-
-def _as_result(df: DataFrame, provider, status, final_url, html, api_company=None, api_role=None, fetch_error=None) -> DataFrame:
-    return df.withColumns(
-        {
-            "status": status,
-            "final_url": final_url,
-            "html": F.coalesce(html, F.lit("")),
-            "provider": provider,
-            "api_company": F.coalesce(api_company if api_company is not None else F.lit(""), F.lit("")),
-            "api_role": F.coalesce(api_role if api_role is not None else F.lit(""), F.lit("")),
-            "fetch_error": F.coalesce(fetch_error if fetch_error is not None else F.lit(""), F.lit("")),
-        }
-    )
 
 
 def fetch_smart(df: DataFrame, http_client, renderer_client, url_col: str = "url") -> DataFrame:
@@ -187,132 +192,95 @@ def fetch_smart(df: DataFrame, http_client, renderer_client, url_col: str = "url
     # 'status') are replaced by the fetch results
     passthrough = [c for c in df.columns if c not in RESULT_COLS]
 
-    # --- tier 1: ATS APIs on the pattern-matching subset
-    is_api_shaped = url.rlike(ATS_API_SPARK_RE)
-    t1 = df.filter(is_api_shaped).withColumn("_api", api_udf(url)).cache()
-    api_err_done = _as_result(
-        t1.filter(F.col("_api.err").isNotNull()),
-        F.lit("gh-api"), F.lit(0), url, F.lit(""), None, None, F.col("_api.err"),
-    ).select(*passthrough, *RESULT_COLS)
-    api_done = _as_result(
-        t1.filter(F.col("_api.ok") == 1),
-        F.col("_api.provider"),
-        F.col("_api.status"),
-        make_canonical(F.col("_api.final_url")),
-        F.lit(""),
-        F.col("_api.api_company"),
-        F.col("_api.api_role"),
-    ).select(*passthrough, *RESULT_COLS)
+    def fetched_ok(page: str) -> F.Column:
+        return (F.col(f"{page}.status") < 400) & has_useful_signal(F.col(f"{page}.html"))
 
-    # --- tier 2: direct fetch for everyone else (incl. API misses)
-    t2_in = df.filter(~is_api_shaped).unionByName(
-        t1.filter(F.col("_api.ok") == 0).filter(F.col("_api.err").isNull()).drop("_api")
+    def rendered_ok(page: str) -> F.Column:
+        return F.col(f"{page}.final_url").isNotNull() & has_useful_signal(F.col(f"{page}.html"))
+
+    # each tier's gate, from the earlier tiers' outputs; a page's
+    # useful-signal test is a wide regex tree, so it runs once into a
+    # flag column that the gates and the outcome pick both read
+    api_miss = (F.col("_api.ok") == 0) & F.col("_api.err").isNull()
+    thin = api_miss & F.col("_direct.err").isNull() & ~F.col("_direct_ok")
+    ats_url = F.col("_ats_url")
+    api2_miss = ats_url.isNotNull() & (F.col("_api2.ok") == 0)
+    chained = (
+        # rows without a URL have nothing to fetch: dropped, not
+        # dead-lettered
+        df.filter(url.isNotNull())
+        # tier 1: ATS APIs on the pattern-matching URLs
+        .withColumn("_api", api_udf(url, url.rlike(ATS_API_SPARK_RE)))
+        # tier 2: direct fetch for everyone else (incl. API misses)
+        .withColumn("_direct", http_udf(url, api_miss))
+        .withColumn("_direct_ok", fetched_ok("_direct"))
+        # tier 3: renderer for thin pages
+        .withColumn("_rendered", render_udf(url, thin))
+        .withColumn("_rendered_ok", rendered_ok("_rendered"))
+        # tier 4: aggregator unwrap on whatever HTML we hold
+        .withColumn(
+            "_ats_url",
+            F.when(
+                thin & ~F.col("_rendered_ok") & is_aggregator_host(host_from_url(url)),
+                first_ats_link(F.coalesce(F.col("_rendered.html"), F.col("_direct.html"), F.lit(""))),
+            ),
+        )
+        .withColumn("_api2", api_udf(ats_url, ats_url.isNotNull()))
+        .withColumn("_d2", http_udf(ats_url, api2_miss))
+        .withColumn("_d2_ok", fetched_ok("_d2"))
+        .withColumn("_r2", render_udf(ats_url, api2_miss & ~F.col("_d2_ok")))
+        .withColumn("_r2_ok", rendered_ok("_r2"))
     )
-    t2_all = t2_in.withColumn("_direct", http_udf(url)).cache()
-    direct_err_done = _as_result(
-        t2_all.filter(F.col("_direct.err").isNotNull()),
-        F.lit("direct"), F.lit(0), url, F.lit(""), None, None, F.col("_direct.err"),
-    ).select(*passthrough, *RESULT_COLS)
-    t2 = t2_all.filter(F.col("_direct.err").isNull())
-    direct_useful = (F.col("_direct.status") < 400) & has_useful_signal(F.col("_direct.html"))
-    direct_done = _as_result(
-        t2.filter(direct_useful),
-        F.lit("direct"),
-        F.col("_direct.status"),
-        F.col("_direct.final_url"),
-        F.col("_direct.html"),
-    ).select(*passthrough, *RESULT_COLS)
 
-    # --- tier 3: renderer for thin pages
-    t3 = t2.filter(~direct_useful).withColumn("_rendered", render_udf(url)).cache()
-    render_useful = F.col("_rendered.final_url").isNotNull() & has_useful_signal(
-        F.col("_rendered.html")
-    )
-    render_done = _as_result(
-        t3.filter(render_useful),
-        F.lit("renderer"),
-        F.col("_rendered.status"),
-        F.col("_rendered.final_url"),
-        F.col("_rendered.html"),
-    ).select(*passthrough, *RESULT_COLS)
+    def api_hit(api: str) -> dict:
+        return {
+            "provider": F.col(f"{api}.provider"),
+            "status": F.col(f"{api}.status"),
+            "final_url": make_canonical(F.col(f"{api}.final_url")),
+            "api_company": F.col(f"{api}.api_company"),
+            "api_role": F.col(f"{api}.api_role"),
+        }
 
-    # --- tier 4: aggregator unwrap on whatever HTML we hold
-    rest = t3.filter(~render_useful)
-    best_html = F.coalesce(F.col("_rendered.html"), F.col("_direct.html"), F.lit(""))
-    rest = rest.withColumn("_ats_url", first_ats_link(best_html)).cache()
-    unwrap_cond = is_aggregator_host(host_from_url(url)) & F.col("_ats_url").isNotNull()
-    unwrap_in = rest.filter(unwrap_cond)
+    def page(provider: str, p: str) -> dict:
+        return {
+            "provider": F.lit(provider),
+            "status": F.col(f"{p}.status"),
+            "final_url": F.col(f"{p}.final_url"),
+            "html": F.col(f"{p}.html"),
+        }
 
-    u1 = unwrap_in.withColumn("_api2", api_udf(F.col("_ats_url"))).cache()
-    unwrap_api_done = _as_result(
-        u1.filter(F.col("_api2.ok") == 1),
-        F.col("_api2.provider"),
-        F.col("_api2.status"),
-        make_canonical(F.col("_api2.final_url")),
-        F.lit(""),
-        F.col("_api2.api_company"),
-        F.col("_api2.api_role"),
-    ).select(*passthrough, *RESULT_COLS)
+    def error(provider: str, err: str) -> dict:
+        return {"provider": F.lit(provider), "status": F.lit(0), "final_url": url, "fetch_error": F.col(err)}
 
-    u2 = (
-        u1.filter(F.col("_api2.ok") == 0)
-        .withColumn("_d2", http_udf(F.col("_ats_url")))
-        .cache()
-    )
-    d2_useful = (F.col("_d2.status") < 400) & has_useful_signal(F.col("_d2.html"))
-    unwrap_direct_done = _as_result(
-        u2.filter(d2_useful),
-        F.lit("direct-unwrapped"),
-        F.col("_d2.status"),
-        F.col("_d2.final_url"),
-        F.col("_d2.html"),
-    ).select(*passthrough, *RESULT_COLS)
+    # Tier outcomes in cascade order. A gated-off tier's empty result
+    # fails its condition, so the first true one is the row's tier.
+    outcomes = [
+        (F.col("_api.err").isNotNull(), error("gh-api", "_api.err")),
+        (F.col("_api.ok") == 1, api_hit("_api")),
+        (F.col("_direct.err").isNotNull(), error("direct", "_direct.err")),
+        (F.col("_direct_ok"), page("direct", "_direct")),
+        (F.col("_rendered_ok"), page("renderer", "_rendered")),
+        (F.col("_api2.ok") == 1, api_hit("_api2")),
+        (F.col("_d2_ok"), page("direct-unwrapped", "_d2")),
+        (F.col("_r2_ok"), page("renderer-unwrapped", "_r2")),
+        # tier 5: last resort — rendered else direct (:479)
+        (F.col("_rendered.final_url").isNotNull(), page("renderer", "_rendered")),
+    ]
+    last_resort = page("direct", "_direct")
 
-    u3 = u2.filter(~d2_useful).withColumn("_r2", render_udf(F.col("_ats_url"))).cache()
-    r2_useful = F.col("_r2.final_url").isNotNull() & has_useful_signal(F.col("_r2.html"))
-    unwrap_render_done = _as_result(
-        u3.filter(r2_useful),
-        F.lit("renderer-unwrapped"),
-        F.col("_r2.status"),
-        F.col("_r2.final_url"),
-        F.col("_r2.html"),
-    ).select(*passthrough, *RESULT_COLS)
+    def pick(c: str) -> F.Column:
+        (cond, vals), *rest = outcomes
+        col = F.when(cond, vals.get(c))
+        for cond, vals in rest:
+            col = col.when(cond, vals.get(c))
+        col = col.otherwise(last_resort.get(c))
+        # html and the api/error strings read NULL (or unset) as ''
+        return col if c in ("status", "final_url", "provider") else F.coalesce(col, F.lit(""))
 
-    # --- tier 5: last resort — rendered else direct (:479)
-    unwrap_failed = u3.filter(~r2_useful)
-    # no_unwrap is the exact null-safe complement of unwrap_cond over
-    # `rest` — a filter, NOT an anti-join on the passthrough columns
-    # (anti-join equality is null-unsafe: a row with any NULL
-    # passthrough value that entered the unwrap branch would survive
-    # the anti-join and be emitted twice, duplicating a
-    # side-effecting fetch; identical passthrough rows would also
-    # collapse). A NULL predicate means the row did NOT enter
-    # unwrap_in, so it belongs here.
-    no_unwrap = rest.filter(~F.coalesce(unwrap_cond, F.lit(False)))
-    last_in = no_unwrap.unionByName(unwrap_failed.select(*no_unwrap.columns))
-    rendered_exists = F.col("_rendered.final_url").isNotNull()
-    last_done = _as_result(
-        last_in,
-        F.when(rendered_exists, F.lit("renderer")).otherwise(F.lit("direct")),
-        F.when(rendered_exists, F.col("_rendered.status")).otherwise(F.col("_direct.status")),
-        F.when(rendered_exists, F.col("_rendered.final_url")).otherwise(F.col("_direct.final_url")),
-        F.when(rendered_exists, F.col("_rendered.html")).otherwise(F.col("_direct.html")),
-    ).select(*passthrough, *RESULT_COLS)
-
-    out = (
-        api_done.unionByName(api_err_done)
-        .unionByName(direct_done)
-        .unionByName(direct_err_done)
-        .unionByName(render_done)
-        .unionByName(unwrap_api_done)
-        .unionByName(unwrap_direct_done)
-        .unionByName(unwrap_render_done)
-        .unionByName(last_done)
-    )
-    # Materialize and truncate lineage: (a) the side-effecting fetch
-    # UDFs run exactly once, (b) downstream plans (the decide cascade
-    # is a large expression tree) don't embed the 7-branch cascade —
-    # without this Catalyst re-optimizes the combined plan for
-    # minutes. Fetch batches are bounded (BATCH_SIZE), so local
+    out = chained.select(*passthrough, *[pick(c).alias(c) for c in RESULT_COLS])
+    # Materialize and truncate lineage: (a) the single action runs each
+    # side-effecting UDF at most once per row, (b) downstream plans (the
+    # decide cascade is a large expression tree) don't embed the
+    # cascade. Fetch batches are bounded (BATCH_SIZE), so local
     # checkpoint storage is small by construction.
     return out.localCheckpoint(eager=True)

@@ -76,14 +76,3 @@ def apply_notes(tracker: DataFrame, profile: dict[str, str]) -> DataFrame:
             "li_followup": F.when(need, followup).otherwise(F.col("li_followup")),
         }
     )
-
-
-def profile_map(profile_df: DataFrame) -> dict[str, str]:
-    """Profile sheet → dict (reference readProfile_, :953-965).
-    The profile is a tiny broadcast-class dimension — collecting it
-    to the driver is the Spark-idiomatic move."""
-    return {
-        r["key"].strip(): (r["value"] or "").strip()
-        for r in profile_df.collect()
-        if r["key"] and r["key"].strip()
-    }

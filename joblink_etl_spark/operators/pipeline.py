@@ -29,42 +29,47 @@ from .notes import needs_notes
 from .writeback import TRACKER_KEY, merge_writeback
 
 
+# the columns decide() adds (extract_signals + decide_company_role)
+DECIDE_COLS = (
+    "host", "is_agg", "canonical", "jsonld", "og_site", "h1", "og_title",
+    "title", "ats_slug_company", "company", "role", "conf", "decision",
+)
+
+
 def escalate_weak_parses(parsed: DataFrame, renderer_client) -> DataFrame:
     """Second-chance renderer escalation (reference :897-906): rows
     with conf==0 whose fetch wasn't the renderer get one re-render +
     re-decide; the better parse wins and gains a
-    fetch:{escalated=renderer} provenance token."""
+    fetch:{escalated=renderer} provenance token.
+
+    One gated pass, like the fetch cascade: the render UDF's gate is
+    the weak-row test, so other rows make no call. Every row is
+    re-decided, but only rows the renderer returned HTML for take the
+    new parse; the rest keep their first one."""
     weak = (F.col("conf") == 0) & (F.col("provider") != "renderer")
-    strong = parsed.filter(~weak).withColumn("escalated", F.lit(False))
-
-    subset = parsed.filter(weak)
-    if subset.isEmpty():
-        return strong
     render_udf = make_render_udf(renderer_client)
-    rerendered = subset.withColumn("_r", render_udf(F.col("final_url"))).cache()
-    no_html = rerendered.filter(
-        F.col("_r.final_url").isNull() | (F.coalesce(F.col("_r.html"), F.lit("")) == "")
-    ).drop("_r").withColumn("escalated", F.lit(False))
-
-    redecided = (
-        rerendered.filter(
-            F.col("_r.final_url").isNotNull() & (F.coalesce(F.col("_r.html"), F.lit("")) != "")
+    got_html = F.col("_r.final_url").isNotNull() & (F.coalesce(F.col("_r.html"), F.lit("")) != "")
+    first = {c: f"_first_{c}" for c in DECIDE_COLS}
+    held = (
+        parsed.withColumn("_r", render_udf(F.col("final_url"), weak))
+        .withColumnsRenamed(first)
+        .withColumns(
+            {
+                "_got": got_html,
+                "html2": F.when(got_html, F.col("_r.html")).otherwise(F.lit("")),
+                "final_url2": F.when(
+                    got_html, F.coalesce(F.col("_r.final_url"), F.col("final_url"))
+                ).otherwise(F.col("final_url")),
+            }
         )
-        .drop(
-            "host", "is_agg", "canonical", "jsonld", "og_site", "h1",
-            "og_title", "title", "ats_slug_company", "company", "role",
-            "conf", "decision",
-        )
-        .withColumn("html2", F.col("_r.html"))
-        .withColumn("final_url2", F.coalesce(F.col("_r.final_url"), F.col("final_url")))
-        .drop("_r")
     )
-    redecided = decide(redecided, html_col="html2", url_col="final_url2")
-    # conf here is vs the original 0 — any positive re-parse wins (:903)
-    better = redecided.withColumn("escalated", F.col("conf") > 0).drop("html2", "final_url2")
-    return strong.unionByName(no_html.select(*strong.columns)).unionByName(
-        better.select(*strong.columns)
-    )
+    redecided = decide(held, html_col="html2", url_col="final_url2")
+    got = F.col("_got")
+    return redecided.withColumns(
+        {c: F.when(got, F.col(c)).otherwise(F.col(old)) for c, old in first.items()}
+        # conf here is vs the original 0 — any positive re-parse wins (:903)
+        | {"escalated": got & (F.col("conf") > 0)}
+    ).select(*parsed.columns, "escalated")
 
 
 def parse_batch(

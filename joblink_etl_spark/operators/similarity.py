@@ -786,28 +786,6 @@ def _pq_assign(subs: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def pq_codebooks(
-    vectors: DataFrame,
-    n_sub: int = 4,
-    k_every: int = 50,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    codes_col: str = "q_codes",
-    k_cap: int | None = None,
-) -> DataFrame:
-    """Per-subspace codebooks (sub, _cid, _cv) trained with the same
-    BIT-EXACT integer Lloyd's as kmeans_codes (see its docstring for
-    why integer arithmetic is what makes a cross-engine oracle
-    possible), run over all subspaces IN ONE PLAN: the subspace index
-    rides every key, so one broadcast + one (sub, cid, pos) shuffle
-    per iteration covers all n_sub codebooks — not n_sub separate
-    jobs. Deterministic init: every k_every-th vector seeds each
-    subspace's codebook; `k_cap` bounds codebook size independently
-    of corpus size (see kmeans_codes)."""
-    subs = _pq_subspaces(vectors, n_sub, id_col, codes_col).persist()
-    return _pq_train(subs, k_every, iters, id_col, k_cap)
-
-
 def _pq_train(
     subs: DataFrame,
     k_every: int,

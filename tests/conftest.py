@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -31,13 +33,11 @@ SLOW_TESTS = frozenset(
         "test_t_closeness_invariants",           # 56 s: hypothesis loop
         "test_waterfill_is_max_min_fair",        # 35 s: hypothesis loop
         "test_bpe_encode_fixed_matches_duckdb_fold_replay",  # 30 s
-        "test_fetch_error_dead_letters_row",     # 24 s
         "test_decide_conf_invariants",           # 21 s: hypothesis loop
         "test_stream_ingest_curated_matches_per_file_batch",  # 21 s
         "test_streaming_sessions_state_and_timeout_flush",    # 21 s
         "test_stream_batch_twin_bit_equality",   # 9-19 s x 13 twins
         "test_scrub_never_leaves_cut_content_and_conserves_chars",  # 18 s
-        "test_llm_rescue_fills_weak_rows",       # 18 s
         "test_lrs_matches_bruteforce",           # 18 s
         "test_length_bucket_batches_conserves_rows_and_waste",  # 17 s
         "test_matches_label_propagation",        # 16 s: CC-vs-LP cross-check
@@ -48,9 +48,20 @@ SLOW_TESTS = frozenset(
 
 
 def pytest_collection_modifyitems(config, items):
+    names, files = set(), set()
     for item in items:
-        if item.name.split("[")[0] in SLOW_TESTS:
+        name = item.name.split("[")[0]
+        names.add(name)
+        files.add(item.path.name)
+        if name in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # On a collection of every test module, each entry must name a
+    # collected test: a renamed or deleted slow test must not leave a
+    # stale entry behind (nor silently drop its test into the gate).
+    if files >= {p.name for p in Path(__file__).parent.glob("test_*.py")}:
+        stale = sorted(SLOW_TESTS - names)
+        if stale:
+            raise pytest.UsageError(f"SLOW_TESTS entries match no collected test: {stale}")
 
 
 @pytest.fixture(scope="session")

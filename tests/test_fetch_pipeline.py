@@ -16,8 +16,14 @@ from joblink_etl_spark.clients import (
     ThrowingHttpClient,
 )
 from joblink_etl_spark.operators.enqueue import enqueue
-from joblink_etl_spark.operators.fetch import fetch_smart
-from joblink_etl_spark.operators.pipeline import notes_batch, parse_batch
+from joblink_etl_spark.operators.fetch import (
+    fetch_smart,
+    make_api_udf,
+    make_http_udf,
+    make_render_udf,
+)
+from joblink_etl_spark.operators.pipeline import drain_all, notes_batch, parse_batch
+from perfbench.clients import counting_clients
 
 HTTP = SyntheticSiteHttpClient()
 RENDERER = FakeRendererClient()
@@ -101,6 +107,54 @@ def test_null_passthrough_not_duplicated(spark):
     assert by_idx[1]["provider"] == "gh-api"  # unwrapped exactly once
     assert by_idx[3]["provider"] == "gh-api"
     assert by_idx[2]["provider"] == "direct"  # last resort untouched
+
+
+# Client calls ONE fetch_smart makes per link of each URL class, as
+# (http, render): the fetch part of perfbench/expect.EXPECTED_CALLS,
+# whose drain counts the parse fetch, the notes re-fetch and the
+# renderer escalation of weak parses.
+FETCH_CALLS = {
+    "greenhouse": (1, 0),  # the ATS API call only
+    "lever": (1, 0),
+    "direct": (1, 0),
+    "thin": (1, 1),  # direct page is thin → renderer
+    "aggregator": (2, 1),  # direct, renderer, then the unwrapped ATS API
+    "broken": (1, 1),  # direct 500, renderer fails → last resort
+    "raise": (1, 0),  # client throws → dead-lettered, no further tier
+}
+
+
+def test_fetch_exact_client_calls(spark):
+    acc, http, renderer, _ = counting_clients(spark.sparkContext)
+    urls = {
+        "greenhouse": URLS["gh"], "lever": URLS["lever"], "direct": URLS["direct"],
+        "thin": URLS["thin"], "aggregator": URLS["agg"], "broken": URLS["broken"],
+        "raise": "https://site1.example.com/raise/9",
+    }
+    df = spark.createDataFrame(
+        [("S", i, u) for i, u in enumerate(urls.values())],
+        "sheet_name string, row_index long, url string",
+    )
+    out = fetch_smart(df, http, renderer)  # the eager pin runs every call
+    assert out.count() == len(urls)
+    calls = dict(acc.value)
+    for cls, (n_http, n_render) in FETCH_CALLS.items():
+        assert (calls.get(("http", cls), 0), calls.get(("render", cls), 0)) == (n_http, n_render), cls
+    assert {cls for _, cls in calls} <= set(FETCH_CALLS)
+
+    # a false gate skips the client and returns the empty result
+    acc.value = {}
+    gated = df.select(
+        make_api_udf(http)(F.col("url"), F.lit(False)).alias("api"),
+        make_http_udf(http)(F.col("url"), F.lit(False)).alias("direct"),
+        make_render_udf(renderer)(F.col("url"), F.lit(False)).alias("rendered"),
+    ).collect()
+    assert len(gated) == len(urls)
+    assert acc.value == {}
+    for r in gated:
+        assert (r["api"]["ok"], r["api"]["err"]) == (0, None)
+        assert r["direct"]["final_url"] is None and r["direct"]["err"] is None
+        assert r["rendered"]["final_url"] is None
 
 
 def _tracker(spark, rows):
@@ -208,8 +262,6 @@ def test_notes_batch_llm_and_fallback(spark):
 def test_drain_all_full_lifecycle(spark):
     """§3.1+§3.2 chained: 10 links drain through parse AND notes in
     multiple small batches until both queues are empty."""
-    from joblink_etl_spark.operators.pipeline import drain_all
-
     rows = [
         ("S", i, f"https://site1.example.com/direct/{i}", "", "", "", "", "", "", "")
         for i in range(2, 12)
@@ -255,3 +307,23 @@ def test_fetch_error_dead_letters_row(spark):
     # no notes work for the errored row
     keys = {(r["sheet_name"], r["row_index"]) for r in out["notes_candidates"].collect()}
     assert ("S", 3) not in keys
+
+
+def test_drain_all_leaves_nothing_cached(spark):
+    """The drain pins its relations with localCheckpoint; a .cache()
+    left behind would hold its blocks for the session's lifetime. The
+    broken link parses weak, so the renderer escalation runs too."""
+    spark.catalog.clearCache()
+    tracker = _tracker(
+        spark,
+        [
+            ("S", 2, URLS["broken"], "", "", "", "", "", "", ""),  # weak → escalated
+            ("S", 3, URLS["thin"], "", "", "", "", "", "", ""),
+        ],
+    )
+    out = drain_all(
+        tracker, _queue_from(spark, tracker), None, HTTP, RENDERER, LLM,
+        {"one-line hook": "builder"},
+    )
+    assert {r["row_index"]: r["status"] for r in out["tracker"].collect()} == {2: "ok", 3: "ok"}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

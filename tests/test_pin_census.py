@@ -95,8 +95,10 @@ PIN_CENSUS: dict[tuple[str, str], dict] = {
     },
     # --- reference-pipeline batches (sheet/queue scale by design) ------
     ("operators/fetch.py", "fetch_smart"): {
-        # one fetch batch, <= BATCH_SIZE rows; also guarantees the
-        # side-effecting fetch UDFs run exactly once
+        # one fetch batch, <= BATCH_SIZE rows: the single action over
+        # the gated UDF chain, so each side-effecting fetch UDF runs
+        # at most once per row and downstream plans don't embed the
+        # cascade
         "class": "bounded", "n": 1,
     },
     ("operators/pipeline.py", "parse_batch"): {

@@ -112,3 +112,17 @@ def test_whitelist_entries_still_registered():
     qs = registry.queries()
     for name in WHITELIST:
         assert name in qs
+
+
+def test_ab_probe_args():
+    """tools/ab_probe.py: a flag missing its value, an unknown flag that
+    merely starts with a known one, or no positionals is a usage error,
+    not an IndexError or a silently swallowed flag."""
+    from ab_probe import parse_args
+
+    a = parse_args(["/sf", "q1", "q2", "--n", "5", "--ref=HEAD~1"])
+    assert (a.sf_dir, a.queries, a.n, a.ref) == ("/sf", ["q1", "q2"], 5, "HEAD~1")
+    assert (parse_args(["/sf", "q"]).n, parse_args(["/sf", "q"]).ref) == (3, "HEAD")
+    for bad in (["/sf", "q", "--n"], ["/sf", "q", "--ref"], ["/sf", "q", "--nx", "2"], ["/sf"], []):
+        with pytest.raises(SystemExit):
+            parse_args(bad)

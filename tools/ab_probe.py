@@ -17,6 +17,7 @@ Usage:
 
 from __future__ import annotations
 
+import argparse
 import statistics
 import subprocess
 import sys
@@ -100,28 +101,21 @@ def load_old_module(path: str, ref: str) -> types.ModuleType:
     return mod
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    p = argparse.ArgumentParser(
+        description="Interleaved old-vs-new A/B for registered queries.",
+        allow_abbrev=False,
+    )
+    p.add_argument("sf_dir", help="directory of the parquet tables at one scale factor")
+    p.add_argument("queries", nargs="+", help="registered query names with a PATCHES entry")
+    p.add_argument("--n", type=int, default=3, help="interleaved repetitions per arm")
+    p.add_argument("--ref", default="HEAD", help="git ref the old arm loads from")
+    return p.parse_args(argv)
+
+
 def main() -> None:
-    args, n, ref, skip = [], 3, "HEAD", False
-    argv = sys.argv[1:]
-    for i, a in enumerate(argv):
-        if skip:
-            skip = False
-            continue
-        if a.startswith("--n"):
-            if "=" in a:
-                n = int(a.split("=")[1])
-            else:
-                n = int(argv[i + 1])
-                skip = True
-        elif a.startswith("--ref"):
-            if "=" in a:
-                ref = a.split("=")[1]
-            else:
-                ref = argv[i + 1]
-                skip = True
-        elif not a.startswith("--"):
-            args.append(a)
-    sf_dir, names = args[0], args[1:]
+    opts = parse_args()
+    sf_dir, names, n, ref = opts.sf_dir, opts.queries, opts.n, opts.ref
 
     import importlib
 
