@@ -12,8 +12,9 @@ JSON-LD recursion (a pandas UDF) is JVM-side and codegen-friendly —
 at 100 TB this is a single narrow projection, no shuffle at all.
 
 The LLM rescue branch (reference :744-769) is deliberately NOT in
-this deterministic core; operators/llm_rescue.py applies it as a
-filtered subset re-pass (cheap-first tiering, SURVEY §4).
+this deterministic core; operators/llm_rescue.py applies it as one
+projection whose LLM UDF is gated on the weak-row test (cheap-first
+tiering, SURVEY §4).
 """
 
 from __future__ import annotations

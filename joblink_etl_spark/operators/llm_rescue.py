@@ -1,13 +1,14 @@
-"""LLM escalation as filtered-subset passes (SURVEY.md §2.11 U1/U2).
+"""LLM escalation as gated UDF passes (SURVEY.md §2.11 U1/U2).
 
 The reference calls the LLM only when deterministic signals are weak
 (decideCompanyRole_ LLM branch, code-LLM-intergration.js:744-769) and
 generates outreach notes with a template fallback on any LLM error
-(:1169-1179). Spark spelling: filter the weak subset, run one
-Arrow-batched nondeterministic UDF over it, union back — the
-expensive call never touches strong rows (cheap-first tiering,
-SURVEY §4: subset+union rather than when(), since Catalyst may
-evaluate both when() branches).
+(:1169-1179). Spark spelling, like the fetch cascade: one projection
+whose Arrow-batched nondeterministic extract UDF takes the weak-row
+test as a gate column, so strong rows get an empty result without a
+client call (cheap-first tiering, SURVEY §4). The gate sits inside
+the UDF, not in a when() around it, whose branches Catalyst may both
+evaluate.
 """
 
 from __future__ import annotations
@@ -50,23 +51,28 @@ def _llm_json(content: str) -> dict:
 
 
 def make_extract_udf(llm_client):
+    """extract_udf(url, h1, og_title, og_site, title, body, gate): a
+    false gate returns the empty result without a client call."""
+
+    def call(u, h, ot, os_, t, b):
+        snippet = {"url": u, "h1": h, "ogTitle": ot, "ogSite": os_,
+                   "title": t, "body_preview": b}
+        try:
+            out = _llm_json(llm_client.extract(snippet))
+            company = (out.get("company") or "").strip()
+            role = (out.get("role") or "").strip()
+        except Exception as e:  # noqa: BLE001 — any client error dead-letters
+            return ("", "", str(e)[:300])
+        return (company, role, None) if company or role else ("", "", "no-output")
+
     @pandas_udf(EXTRACT_SCHEMA)
     def llm_extract(url: pd.Series, h1: pd.Series, og_title: pd.Series,
-                    og_site: pd.Series, title: pd.Series, body: pd.Series) -> pd.DataFrame:
-        rows = []
-        for u, h, ot, os_, t, b in zip(url, h1, og_title, og_site, title, body):
-            snippet = {"url": u, "h1": h, "ogTitle": ot, "ogSite": os_,
-                       "title": t, "body_preview": b}
-            try:
-                out = _llm_json(llm_client.extract(snippet))
-                company = (out.get("company") or "").strip()
-                role = (out.get("role") or "").strip()
-                if not company and not role:
-                    rows.append(("", "", "no-output"))
-                else:
-                    rows.append((company, role, None))
-            except Exception as e:  # noqa: BLE001 — any client error dead-letters
-                rows.append(("", "", str(e)[:300]))
+                    og_site: pd.Series, title: pd.Series, body: pd.Series,
+                    gate: pd.Series) -> pd.DataFrame:
+        rows = [
+            call(*args) if g else ("", "", None)
+            for *args, g in zip(url, h1, og_title, og_site, title, body, gate)
+        ]
         return pd.DataFrame(rows, columns=["company", "role", "err"])
 
     return llm_extract.asNondeterministic()
@@ -79,19 +85,11 @@ def llm_rescue(decided: DataFrame, llm_client, body_preview_col: str = "body_pre
     fill blanks only, role re-cleaned against the (possibly new)
     company, conf floored at 0.6, extract:{mode=llm} token; on error:
     extract:{mode=llm, err=...} token, values untouched (:752-769).
-    Adds an 'extract_token' column ('' on the strong subset).
+    Adds an 'extract_token' column ('' on strong rows, which keep
+    every value).
     """
     weak = (
         (F.col("role") == "") | is_generic_title(F.col("role")) | (F.col("company") == "")
-    )
-    strong = decided.filter(~weak).withColumn("extract_token", F.lit(""))
-
-    subset = decided.filter(weak).withColumn(
-        "_llm",
-        make_extract_udf(llm_client)(
-            F.col("canonical"), F.col("h1"), F.col("og_title"),
-            F.col("og_site"), F.col("title"), F.col(body_preview_col),
-        ),
     )
     ok = F.col("_llm.err").isNull()
     looks_generic = (F.col("role") == "") | is_generic_title(F.col("role"))
@@ -111,17 +109,23 @@ def llm_rescue(decided: DataFrame, llm_client, body_preview_col: str = "body_pre
     token = F.when(ok, F.lit("extract:{mode=llm}")).otherwise(
         F.concat(F.lit("extract:{mode=llm, err="), F.col("_llm.err"), F.lit("}"))
     )
-    rescued = (
-        subset.withColumns(
-            {
-                "company": new_company,
-                "role": new_role,
-                "conf": F.greatest(F.least(conf3, F.lit(1.0)), F.lit(0.0)),
-                "extract_token": token,
-            }
-        ).drop("_llm")
+    rescued = {
+        "company": (new_company, F.col("company")),
+        "role": (new_role, F.col("role")),
+        "conf": (F.greatest(F.least(conf3, F.lit(1.0)), F.lit(0.0)), F.col("conf")),
+        "extract_token": (token, F.lit("")),
+    }
+    return (
+        decided.withColumn(
+            "_llm",
+            make_extract_udf(llm_client)(
+                F.col("canonical"), F.col("h1"), F.col("og_title"),
+                F.col("og_site"), F.col("title"), F.col(body_preview_col), weak,
+            ),
+        )
+        .withColumns({c: F.when(weak, e).otherwise(keep) for c, (e, keep) in rescued.items()})
+        .drop("_llm")
     )
-    return strong.unionByName(rescued)
 
 
 def make_notes_udf(llm_client):

@@ -20,13 +20,12 @@ from pyspark.sql import functions as F
 
 from ..functions.html import text_preview
 from ..functions.provenance import append_rendered_token, append_source_token
-from ..functions.text import format_conf
 from .decide import decide
 from .enqueue import QUEUE_KEY, dequeue, select_batch
 from .fetch import fetch_smart, make_render_udf
 from .llm_rescue import llm_rescue
 from .notes import needs_notes
-from .writeback import TRACKER_KEY, merge_writeback
+from .writeback import PARSE_COLS, TRACKER_KEY, merge_rows, new, parse_sets
 
 
 # the columns decide() adds (extract_signals + decide_company_role)
@@ -103,12 +102,7 @@ def parse_batch(
     else:
         parsed = parsed.withColumn("extract_token", F.lit(""))
 
-    merge_in = parsed.select(
-        *QUEUE_KEY,
-        "canonical", "company", "role", "conf", "decision", "provider",
-        "escalated", "extract_token",
-    )
-    new_tracker = _writeback_with_tokens(tracker, merge_in)
+    new_tracker = _writeback_with_tokens(tracker, parsed)
     new_tracker = _mark_error_rows(new_tracker, err_rows)
 
     notes_candidates = (
@@ -140,24 +134,15 @@ def _mark_error_rows(tracker: DataFrame, err_rows: DataFrame) -> DataFrame:
     """ST5 dead-letter write (reference updateStatusCell_ 'error'
     path, :915-918, :932-941): Status='error', truncated message
     appended to Source, other columns untouched."""
-    e = err_rows.select(
-        *TRACKER_KEY,
-        F.substring(F.col("fetch_error"), 1, 300).alias("_err"),
-        F.lit(True).alias("_err_matched"),
-    ).dropDuplicates(TRACKER_KEY)
-    joined = tracker.join(F.broadcast(e), TRACKER_KEY, "left")
-    matched = F.coalesce(F.col("_err_matched"), F.lit(False))
     prev = F.trim(F.coalesce(F.col("source"), F.lit("")))
-    appended = F.when(prev != "", F.concat(prev, F.lit(" | "), F.col("_err"))).otherwise(
-        F.col("_err")
-    )
-    return (
-        joined.withColumns(
-            {
-                "status": F.when(matched, F.lit("error")).otherwise(F.col("status")),
-                "source": F.when(matched, appended).otherwise(F.col("source")),
-            }
-        ).drop("_err", "_err_matched")
+    msg = F.substring(new("fetch_error"), 1, 300)
+    return merge_rows(
+        tracker,
+        err_rows.select(*TRACKER_KEY, "fetch_error"),
+        {
+            "status": F.lit("error"),
+            "source": F.when(prev != "", F.concat(prev, F.lit(" | "), msg)).otherwise(msg),
+        },
     )
 
 
@@ -165,56 +150,19 @@ def _writeback_with_tokens(tracker: DataFrame, parsed: DataFrame) -> DataFrame:
     """merge_writeback plus the reference's token ordering: the
     escalation token lands BEFORE the parse token (it's appended
     mid-processing, :905), extract after (:849-852)."""
-    pre = parsed.withColumn("_fetch_tok", F.col("escalated")).withColumn(
-        "_extract_tok", F.col("extract_token")
-    )
-    p = pre.select(
-        *TRACKER_KEY, "canonical", "company", "role", "conf", "decision",
-        "provider", "_fetch_tok", "_extract_tok",
-    )
-    joined = tracker.join(
-        F.broadcast(
-            p.withColumnRenamed("canonical", "_c")
-            .withColumnRenamed("company", "_co")
-            .withColumnRenamed("role", "_r")
-            .withColumnRenamed("conf", "_cf")
-            .withColumnRenamed("decision", "_d")
-            .withColumnRenamed("provider", "_p")
-            .withColumn("_matched", F.lit(True))
-        ),
-        TRACKER_KEY,
-        "left",
-    )
-    matched = F.coalesce(F.col("_matched"), F.lit(False))
     src = F.col("source")
     src = F.when(
-        F.coalesce(F.col("_fetch_tok"), F.lit(False)),
+        F.coalesce(new("escalated"), F.lit(False)),
         append_source_token(src, "fetch", {"escalated": F.lit("renderer")}),
     ).otherwise(src)
-    src = append_source_token(
-        src,
-        "parse",
-        {
-            "provider": F.coalesce(F.col("_p"), F.lit("direct")),
-            "signals": F.coalesce(F.col("_d"), F.lit("heuristic")),
-            "conf": format_conf(F.coalesce(F.col("_cf"), F.lit(0.0))),
-        },
+    sets = parse_sets(src)
+    tok = F.coalesce(new("extract_token"), F.lit(""))
+    sets["source"] = F.when(
+        tok != "", append_rendered_token(sets["source"], "extract", tok)
+    ).otherwise(sets["source"])
+    return merge_rows(
+        tracker, parsed.select(*TRACKER_KEY, *PARSE_COLS, "escalated", "extract_token"), sets
     )
-    src = F.when(
-        F.coalesce(F.col("_extract_tok"), F.lit("")) != "",
-        append_rendered_token(src, "extract", F.col("_extract_tok")),
-    ).otherwise(src)
-
-    out = joined.withColumns(
-        {
-            "canonical_link": F.when(matched, F.col("_c")).otherwise(F.col("canonical_link")),
-            "company_auto": F.when(matched, F.col("_co")).otherwise(F.col("company_auto")),
-            "role_auto": F.when(matched, F.col("_r")).otherwise(F.col("role_auto")),
-            "status": F.when(matched, F.lit("ok")).otherwise(F.col("status")),
-            "source": F.when(matched, src).otherwise(F.col("source")),
-        }
-    )
-    return out.drop("_c", "_co", "_r", "_cf", "_d", "_p", "_fetch_tok", "_extract_tok", "_matched")
 
 
 def notes_batch(
@@ -228,8 +176,8 @@ def notes_batch(
 ) -> dict[str, DataFrame]:
     """One drain cycle of the notes queue (reference
     processNotesBatch, :1115-1199): re-check idempotency, re-fetch
-    the page for the snippet, LLM-with-template-fallback, fill-blank
-    write of the two notes columns + notes:{mode=...} token."""
+    the page for the snippet, LLM-with-template-fallback, write of
+    the two notes columns + notes:{mode=...} token."""
     from .llm_rescue import notes_with_fallback
 
     batch = notes_queue.filter(F.col("status") == "queued").orderBy(
@@ -249,29 +197,18 @@ def notes_batch(
     )
     noted = notes_with_fallback(snippet, llm_client, profile)
 
-    n = noted.select(
-        *TRACKER_KEY,
-        F.col("li_invite").alias("_inv"),
-        F.col("li_followup").alias("_fol"),
-        F.col("notes_token").alias("_tok"),
-        F.lit(True).alias("_matched"),
-    )
-    joined = tracker.join(F.broadcast(n), TRACKER_KEY, "left")
-    matched = F.coalesce(F.col("_matched"), F.lit(False))
-    new_tracker = joined.withColumns(
+    # matched rows already passed needs_notes (either cell blank); the
+    # reference then writes BOTH cells unconditionally (:1181-1184) —
+    # overwrite, don't fill-blanks-merge
+    new_tracker = merge_rows(
+        tracker,
+        noted.select(*TRACKER_KEY, "li_invite", "li_followup", "notes_token"),
         {
-            # matched rows already passed needs_notes (either cell
-            # blank); the reference then writes BOTH cells
-            # unconditionally (:1181-1184) — overwrite, don't
-            # fill-blanks-merge
-            "li_invite": F.when(matched, F.col("_inv")).otherwise(F.col("li_invite")),
-            "li_followup": F.when(matched, F.col("_fol")).otherwise(F.col("li_followup")),
-            "source": F.when(
-                matched,
-                append_rendered_token(F.col("source"), "notes", F.col("_tok")),
-            ).otherwise(F.col("source")),
-        }
-    ).drop("_inv", "_fol", "_tok", "_matched")
+            "li_invite": new("li_invite"),
+            "li_followup": new("li_followup"),
+            "source": append_rendered_token(F.col("source"), "notes", new("notes_token")),
+        },
+    )
     new_notes_queue = dequeue(notes_queue, batch.select(*QUEUE_KEY))
     return {"tracker": new_tracker, "notes_queue": new_notes_queue}
 

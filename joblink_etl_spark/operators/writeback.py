@@ -1,21 +1,24 @@
-"""Write-back MERGE (SURVEY.md §2.1 S13-S15).
+"""Tracker write-back MERGE (SURVEY.md §2.1 S13-S15).
 
-The reference writes Canonical/Company/Role into the tracker row and
-appends a parse provenance token (writeBack_,
-code-LLM-intergration.js:821-853); Status is set separately
-(updateStatusCell_, :932-941). Parquet has no MERGE, so this is a
-join-based read-modify-write: tracker LEFT JOIN parsed on the key,
-then per-column conditional overwrite. Only matched rows change;
-unmatched tracker rows pass through bit-identical.
+The reference writes the tracker with one rule: overwrite some cells
+of the row whose key matches, and append a provenance token —
+Canonical/Company/Role plus a parse token (writeBack_,
+code-LLM-intergration.js:821-853), Status (updateStatusCell_,
+:932-941), the two notes cells plus a notes token (:1181-1184).
+Parquet has no MERGE, so every one of those writes goes through
+``merge_rows``: the tracker LEFT JOIN one update row per key, then a
+per-column conditional overwrite. Only matched rows change; unmatched
+tracker rows pass through bit-identical, and a key that appears twice
+in the updates still yields one tracker row.
 
 At 100 TB the tracker side would be partitioned by key and the
-parsed batch is small → broadcast join, and the rewrite touches only
+update batch is small → broadcast join, and the rewrite touches only
 the partitions containing matched keys (partition-scoped RMW).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.provenance import append_source_token
@@ -23,49 +26,65 @@ from ..functions.text import format_conf
 
 TRACKER_KEY = ["sheet_name", "row_index"]
 
+# the parse write-back's update columns (decide() output names)
+PARSE_COLS = ("canonical", "company", "role", "conf", "decision", "provider")
+
+
+def new(name: str) -> Column:
+    """Update column ``name`` as the ``sets`` expressions of
+    ``merge_rows`` read it."""
+    return F.col(f"_new_{name}")
+
+
+def merge_rows(tracker: DataFrame, updates: DataFrame, sets: dict[str, Column]) -> DataFrame:
+    """Overwrite the ``sets`` cells of every tracker row whose key has
+    an update row. ``updates`` holds TRACKER_KEY plus the columns the
+    ``sets`` expressions read through ``new()``; they may also read the
+    tracker row's own cells by name. One update row per key is kept,
+    so a key repeated in ``updates`` still yields one tracker row. The
+    result has the tracker's columns in the tracker's order."""
+    u = updates.select(
+        *TRACKER_KEY,
+        *(F.col(c).alias(f"_new_{c}") for c in updates.columns if c not in TRACKER_KEY),
+        F.lit(True).alias("_matched"),
+    ).dropDuplicates(TRACKER_KEY)
+    matched = F.col("_matched").isNotNull()
+    return (
+        tracker.join(F.broadcast(u), TRACKER_KEY, "left")
+        .withColumns({c: F.when(matched, e).otherwise(F.col(c)) for c, e in sets.items()})
+        .select(*tracker.columns)
+    )
+
+
+def parse_sets(source: Column) -> dict[str, Column]:
+    """The parse write-back's cells (reference :834-840, :914): parse
+    fields OVERWRITE, Status becomes 'ok', and ``source`` (the Source
+    cell, possibly already carrying earlier tokens of this batch) gets
+    a replace-by-kind parse token."""
+    return {
+        "canonical_link": new("canonical"),
+        "company_auto": new("company"),
+        "role_auto": new("role"),
+        "status": F.lit("ok"),
+        "source": append_source_token(
+            source,
+            "parse",
+            {
+                "provider": F.coalesce(new("provider"), F.lit("direct")),
+                "signals": F.coalesce(new("decision"), F.lit("heuristic")),
+                "conf": format_conf(F.coalesce(new("conf"), F.lit(0.0))),
+            },
+        ),
+    }
+
 
 def merge_writeback(tracker: DataFrame, parsed: DataFrame) -> DataFrame:
     """Apply parsed results to the tracker.
 
     parsed columns: sheet_name, row_index, canonical, company, role,
-    conf, decision, provider. Parse fields OVERWRITE (the reference
-    writes them unconditionally, :834-840); the Source column gets a
-    replace-by-kind parse token; Status becomes 'ok' (:914).
-    """
-    p = parsed.select(
-        *TRACKER_KEY,
-        F.col("canonical").alias("_new_canonical"),
-        F.col("company").alias("_new_company"),
-        F.col("role").alias("_new_role"),
-        F.col("conf").alias("_new_conf"),
-        F.col("decision").alias("_new_decision"),
-        F.col("provider").alias("_new_provider"),
-        F.lit(True).alias("_matched"),
-    )
-    joined = tracker.join(F.broadcast(p), TRACKER_KEY, "left")
-    matched = F.coalesce(F.col("_matched"), F.lit(False))
-
-    parse_token_source = append_source_token(
-        F.col("source"),
-        "parse",
-        {
-            "provider": F.coalesce(F.col("_new_provider"), F.lit("direct")),
-            "signals": F.coalesce(F.col("_new_decision"), F.lit("heuristic")),
-            "conf": format_conf(F.coalesce(F.col("_new_conf"), F.lit(0.0))),
-        },
-    )
-    out = joined.withColumns(
-        {
-            "canonical_link": F.when(matched, F.col("_new_canonical")).otherwise(F.col("canonical_link")),
-            "company_auto": F.when(matched, F.col("_new_company")).otherwise(F.col("company_auto")),
-            "role_auto": F.when(matched, F.col("_new_role")).otherwise(F.col("role_auto")),
-            "status": F.when(matched, F.lit("ok")).otherwise(F.col("status")),
-            "source": F.when(matched, parse_token_source).otherwise(F.col("source")),
-        }
-    )
-    return out.drop(
-        "_new_canonical", "_new_company", "_new_role",
-        "_new_conf", "_new_decision", "_new_provider", "_matched",
+    conf, decision, provider."""
+    return merge_rows(
+        tracker, parsed.select(*TRACKER_KEY, *PARSE_COLS), parse_sets(F.col("source"))
     )
 
 
@@ -116,29 +135,3 @@ def merge_writeback_incremental(
         .parquet(tracker_path)
     )
     return affected
-
-
-def fill_blanks_only(existing, new):
-    """The fill-blanks-only rule (SURVEY §1.4): keep a non-blank
-    existing value, else take the new one. Used for the notes columns
-    (:1097-1100) and LLM rescue fills (:758-759)."""
-    return F.when(F.trim(F.coalesce(existing, F.lit(""))) != "", existing).otherwise(new)
-
-
-def mark_errors(tracker: DataFrame, errors: DataFrame, message_col: str = "error") -> DataFrame:
-    """Dead-letter write (ST5, :915-918): Status='error' plus a
-    truncated message; rows still leave the queue (single-attempt)."""
-    e = errors.select(
-        *TRACKER_KEY,
-        F.substring(F.col(message_col), 1, 300).alias("_err"),
-        F.lit(True).alias("_matched"),
-    )
-    joined = tracker.join(F.broadcast(e), TRACKER_KEY, "left")
-    matched = F.coalesce(F.col("_matched"), F.lit(False))
-    return (
-        joined.withColumn(
-            "status",
-            F.when(matched, F.concat(F.lit("error: "), F.col("_err"))).otherwise(F.col("status")),
-        )
-        .drop("_err", "_matched")
-    )

@@ -22,6 +22,7 @@ from joblink_etl_spark.operators.fetch import (
     make_http_udf,
     make_render_udf,
 )
+from joblink_etl_spark.operators.llm_rescue import make_extract_udf
 from joblink_etl_spark.operators.pipeline import drain_all, notes_batch, parse_batch
 from perfbench.clients import counting_clients
 
@@ -125,7 +126,7 @@ FETCH_CALLS = {
 
 
 def test_fetch_exact_client_calls(spark):
-    acc, http, renderer, _ = counting_clients(spark.sparkContext)
+    acc, http, renderer, llm = counting_clients(spark.sparkContext)
     urls = {
         "greenhouse": URLS["gh"], "lever": URLS["lever"], "direct": URLS["direct"],
         "thin": URLS["thin"], "aggregator": URLS["agg"], "broken": URLS["broken"],
@@ -142,12 +143,14 @@ def test_fetch_exact_client_calls(spark):
         assert (calls.get(("http", cls), 0), calls.get(("render", cls), 0)) == (n_http, n_render), cls
     assert {cls for _, cls in calls} <= set(FETCH_CALLS)
 
-    # a false gate skips the client and returns the empty result
+    # a false gate skips the client and returns the empty result, the
+    # LLM extract's gate included
     acc.value = {}
     gated = df.select(
         make_api_udf(http)(F.col("url"), F.lit(False)).alias("api"),
         make_http_udf(http)(F.col("url"), F.lit(False)).alias("direct"),
         make_render_udf(renderer)(F.col("url"), F.lit(False)).alias("rendered"),
+        make_extract_udf(llm)(*[F.col("url")] * 6, F.lit(False)).alias("extracted"),
     ).collect()
     assert len(gated) == len(urls)
     assert acc.value == {}
@@ -155,6 +158,7 @@ def test_fetch_exact_client_calls(spark):
         assert (r["api"]["ok"], r["api"]["err"]) == (0, None)
         assert r["direct"]["final_url"] is None and r["direct"]["err"] is None
         assert r["rendered"]["final_url"] is None
+        assert tuple(r["extracted"]) == ("", "", None)
 
 
 def _tracker(spark, rows):
@@ -309,10 +313,25 @@ def test_fetch_error_dead_letters_row(spark):
     assert ("S", 3) not in keys
 
 
+# the span names perfbench/trace.install records for the drain layers
+TRACED_LAYERS = {
+    "drain", "parse_batch", "notes_batch", "fetch", "decide", "escalate",
+    "llm_rescue", "notes_llm", "writeback", "checkpoint", "isEmpty",
+}
+
+
 def test_drain_all_leaves_nothing_cached(spark):
     """The drain pins its relations with localCheckpoint; a .cache()
     left behind would hold its blocks for the session's lifetime. The
-    broken link parses weak, so the renderer escalation runs too."""
+    broken link parses weak, so the renderer escalation runs too.
+
+    The drain runs under the benchmark's span tracer, which swaps each
+    layer's function on its module: a layer renamed or no longer
+    called through its module leaves its span name unrecorded."""
+    from perfbench.trace import Tracer, install
+
+    from joblink_etl_spark.operators import pipeline
+
     spark.catalog.clearCache()
     tracker = _tracker(
         spark,
@@ -321,9 +340,34 @@ def test_drain_all_leaves_nothing_cached(spark):
             ("S", 3, URLS["thin"], "", "", "", "", "", "", ""),
         ],
     )
-    out = drain_all(
-        tracker, _queue_from(spark, tracker), None, HTTP, RENDERER, LLM,
-        {"one-line hook": "builder"},
-    )
+    try:
+        with install(Tracer(spark.sparkContext, "drain-guard")) as tracer:
+            out = pipeline.drain_all(
+                tracker, _queue_from(spark, tracker), None, HTTP, RENDERER, LLM,
+                {"one-line hook": "builder"},
+            )
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert TRACED_LAYERS <= {s["name"] for s in tracer.spans}
     assert {r["row_index"]: r["status"] for r in out["tracker"].collect()} == {2: "ok", 3: "ok"}
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_drain_all_repeated_queue_key_writes_one_row(spark):
+    """Two edits of one sheet row enqueued in one candidate batch put
+    its key in the queue twice. The drain must still write one tracker
+    row for it, carrying one parse token and one notes token."""
+    tracker = _tracker(spark, [("S", 2, URLS["direct"], "", "", "", "", "", "", "")])
+    cands = tracker.select("sheet_name", "row_index", F.col("link").alias("url"))
+    empty = spark.createDataFrame([], "sheet_name string, row_index long, status string")
+    queue = enqueue(cands.unionByName(cands), empty, now=F.lit(datetime(2024, 1, 1)))
+    assert queue.count() == 2
+    out = drain_all(
+        tracker, queue, None, HTTP, RENDERER, LLM, {"one-line hook": "builder"}
+    )
+    rows = out["tracker"].collect()
+    assert len(rows) == 1
+    row = rows[0]
+    assert (row["status"], row["company_auto"]) == ("ok", "Site 303")
+    assert row["source"].count("parse:{") == 1 and row["source"].count("notes:{") == 1
+    assert out["queue"].count() == 0

@@ -8,7 +8,7 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from joblink_etl_spark.operators.enqueue import dequeue, select_batch
-from joblink_etl_spark.operators.writeback import fill_blanks_only, mark_errors
+from joblink_etl_spark.operators.pipeline import _mark_error_rows
 
 
 def _queue(spark, rows):
@@ -45,27 +45,23 @@ def test_dequeue_anti_join(spark):
     assert left == {("S", 2), ("T", 1)}
 
 
-def test_fill_blanks_only(spark):
-    df = spark.createDataFrame(
-        [("existing", "new"), ("", "new"), ("  ", "new"), (None, "new")],
-        "old string, new string",
-    )
-    got = [r["out"] for r in df.select(fill_blanks_only(F.col("old"), F.col("new")).alias("out")).collect()]
-    assert got == ["existing", "new", "new", "new"]
-
-
-def test_mark_errors_truncates(spark):
+def test_mark_error_rows_dead_letters(spark):
+    """The drain's dead-letter write: Status 'error', the message cut
+    to 300 characters and appended after the existing Source token;
+    unmatched rows unchanged."""
     tracker = spark.createDataFrame(
-        [("S", 1, "queued"), ("S", 2, "queued")],
-        "sheet_name string, row_index long, status string",
+        [("S", 1, "queued", "parse:{provider=direct}"), ("S", 2, "queued", "old:{x=1}")],
+        "sheet_name string, row_index long, status string, source string",
     )
     errors = spark.createDataFrame(
-        [("S", 1, "boom " * 100)], "sheet_name string, row_index long, error string"
+        [("S", 1, "boom " * 100)], "sheet_name string, row_index long, fetch_error string"
     )
-    rows = {r["row_index"]: r["status"] for r in mark_errors(tracker, errors).collect()}
-    assert rows[2] == "queued"
-    assert rows[1].startswith("error: boom")
-    assert len(rows[1]) <= 300 + len("error: ")
+    out = _mark_error_rows(tracker, errors)
+    assert out.columns == tracker.columns
+    rows = {r["row_index"]: r.asDict() for r in out.collect()}
+    assert rows[2] == {"sheet_name": "S", "row_index": 2, "status": "queued", "source": "old:{x=1}"}
+    assert rows[1]["status"] == "error"
+    assert rows[1]["source"] == "parse:{provider=direct} | " + ("boom " * 100)[:300]
 
 
 def test_interval_join_binned_matches_theta(spark):
