@@ -133,7 +133,7 @@ def curation_funnel(
     One logical plan: stage populations are the same subtrees
     curate() builds; the counts are four one-row aggregates crossed
     into a 3-row (stage, rows_in, rows_out, selectivity) report.
-    Integer counts; one division per row."""
+    Integer counts; one division per row (NULL on an empty stage)."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -170,7 +170,7 @@ def curation_funnel(
             F.col("s.rows_in").alias("rows_in"),
             F.col("s.rows_out").alias("rows_out"),
             F.round(
-                F.col("s.rows_out").cast("double") / F.col("s.rows_in"), 6
+                F.try_divide(F.col("s.rows_out").cast("double"), F.col("s.rows_in")), 6
             ).alias("selectivity"),
         )
     )

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from .textstats import PUNCT_CLASS, fingerprint, normalize_text, tokens
 
 # MinHash geometry: NUM_HASHES = BANDS * ROWS_PER_BAND
@@ -554,8 +555,8 @@ def connected_components(
     Near-duplicate candidate graphs converge in a handful of rounds
     (components are small and dense by construction). Each round is
     one shuffle on the edge key plus a broadcast-sized label join at
-    candidate-pair scale; lineage is cut per materialization with
-    localCheckpoint so plans stay flat. Driver-job shape (r15 —
+    candidate-pair scale; lineage is cut per materialization with a
+    ``pin()`` so plans stay flat. Driver-job shape (r15 —
     per-round JOB latency was the measured residual after r14 proved
     the shuffles AQE-deduped): TWO propagation rounds run per Spark
     action (a min-label round is monotone, so "round 2k changed
@@ -566,22 +567,24 @@ def connected_components(
     the old eager-checkpoint job + separate filter/limit/count job.
     For graphs with giant components, swap the propagation step for
     alternating large-star/small-star rounds — the fixpoint and
-    output contract are identical.
+    output contract are identical. ``max_iter`` caps the propagation
+    rounds exactly; 0 returns the initial labels (each node's minimum
+    over itself and its neighbors).
     """
-    sym = (
+    sym = pin(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "candidate",
     )
-    labels = (
+    labels = pin(
         sym.groupBy("a")
         .agg(F.min("b").alias("nbr_min"))
         .select(
             F.col("a").alias("node"),
             F.least(F.col("a"), F.col("nbr_min")).alias("cluster_id"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "candidate",
     )
 
     def _round(lbl: DataFrame) -> DataFrame:
@@ -604,16 +607,18 @@ def connected_components(
             ).alias("_chg"),
         )
 
-    for _ in range(max(1, (max_iter + 1) // 2)):
-        # the odd round is lazily pinned because the even round
-        # references it TWICE (neighbor build keyed on b, label join
-        # keyed on node — different exchanges, so Catalyst would
-        # execute the subtree once per reference); the pin makes both
-        # consumers share one computation inside the same job
-        mid = _round(labels).localCheckpoint(eager=False)
-        new_labels = _round(mid).localCheckpoint(eager=False)
+    for done in range(0, max_iter, 2):
+        new_labels = _round(labels)
+        if done + 1 < max_iter:
+            # the odd round is lazily pinned because the even round
+            # references it TWICE (neighbor build keyed on b, label
+            # join keyed on node — different exchanges, so Catalyst
+            # would execute the subtree once per reference); the pin
+            # makes both consumers share one computation in the job
+            new_labels = _round(pin(new_labels, "candidate"))
+        new_labels = pin(new_labels, "candidate")
         # the count_if action materializes the lazy checkpoint AND
-        # reads the second round's convergence flag in the same job
+        # reads the job's last round's convergence flag
         changed = new_labels.agg(
             F.count_if(F.col("_chg")).alias("_n")
         ).first()["_n"]
@@ -752,12 +757,12 @@ def connected_components_star(
     implementation against the recursive-closure SQL, and a pytest
     property run pins star == propagation on adversarial shapes
     (paths, giant stars, cliques)."""
-    e = (
+    e = pin(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "candidate",
     )
 
     # fixpoint when the (u, v) edge set is unchanged: cheap
@@ -783,9 +788,7 @@ def connected_components_star(
         # the large-star output is referenced twice inside _small_star
         # (the per-node min aggregate and the re-point join) — the lazy
         # pin shares one computation between them within the round's job
-        e2 = _small_star(
-            _large_star(e).localCheckpoint(eager=False)
-        ).localCheckpoint(eager=False)
+        e2 = pin(_small_star(pin(_large_star(e), "candidate")), "candidate")
         if s_old is None:
             s_old = _stats(e)
         s_new = _stats(e2)

@@ -31,6 +31,7 @@ from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 from ..functions.html import has_useful_signal
 from ..functions.predicates import is_aggregator_host, is_ats_host
 from ..functions.url import host_from_url, make_canonical
+from ..pin import pin
 
 # reference fetchViaAtsApis_ URL patterns (:363, :377)
 GH_URL_RE = re.compile(r"https?://(?:boards|job-boards)\.greenhouse\.io/([^/?#]+)/jobs/(\d+)", re.I)
@@ -281,6 +282,5 @@ def fetch_smart(df: DataFrame, http_client, renderer_client, url_col: str = "url
     # Materialize and truncate lineage: (a) the single action runs each
     # side-effecting UDF at most once per row, (b) downstream plans (the
     # decide cascade is a large expression tree) don't embed the
-    # cascade. Fetch batches are bounded (BATCH_SIZE), so local
-    # checkpoint storage is small by construction.
-    return out.localCheckpoint(eager=True)
+    # cascade. Fetch batches are bounded (<= BATCH_SIZE rows).
+    return pin(out, "bounded", eager=True)

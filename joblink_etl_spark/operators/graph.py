@@ -14,9 +14,9 @@ contribution sum) plus a broadcast-eligible join back to the node set;
 the edge set never grows. Ranks are 8 bytes/node. Iterations are
 sequential barriers by nature (same as Lloyd's in similarity.py) and
 parallelize linearly within each round. For 100 TB-scale graphs the
-edge DataFrame arrives pre-partitioned by src; persisting edges+degrees
-across rounds (done below) keeps the per-round cost to the contribution
-shuffle only.
+edge DataFrame arrives pre-partitioned by src; pinning edges+degrees
+across rounds (done below; fault-tolerance tradeoff: ``pin()``) keeps
+the per-round cost to the contribution shuffle only.
 
 The reference has no graph operator — this extends the dedup layer
 (candidate pairs from minhash/LSH are an undirected similarity graph;
@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..pin import pin
 
 SCALE = 10**12
 DAMP_NUM = 85  # damping 0.85 as an exact rational
@@ -56,21 +58,23 @@ def pagerank(
     node has out-edges); for general graphs the standard dangling-mass
     redistribution would add one broadcast scalar per round.
     """
-    # LAZY localCheckpoint (not persist): the edge set is typically
-    # derived from a large upstream plan (minhash banding); the rank
-    # recursion references it 2 + iters times, and without lineage
-    # truncation Catalyst re-optimizes the full upstream tree inside
-    # every reference (measured 14.4 s → ~5 s at sf0.1 — the same
-    # fix connected_components uses). Construction stays action-free.
-    edges = edges.localCheckpoint(eager=False)
+    # LAZY pin (not persist): the edge set is typically derived from
+    # a large upstream plan (minhash banding); the rank recursion
+    # references it 2 + iters times, and without lineage truncation
+    # Catalyst re-optimizes the full upstream tree inside every
+    # reference (measured 14.4 s → ~5 s at sf0.1 — the same fix
+    # connected_components uses). Construction stays action-free.
+    # Candidate scale: repo callers feed candidate-pair graphs; for
+    # web-scale graphs see pin()'s reliable-checkpoint note.
+    edges = pin(edges, "candidate")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # contribution an edge carries per round = rank(src) div outdeg(src)
-    esrc = edges.join(deg, "src").localCheckpoint(eager=False)
-    nodes = (
+    esrc = pin(edges.join(deg, "src"), "candidate")
+    nodes = pin(
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "candidate",
     )
     rank = nodes.withColumn("r", F.lit(scale).cast("long"))
     base = (DAMP_DEN - DAMP_NUM) * scale // DAMP_DEN
@@ -134,20 +138,20 @@ def pagerank_personalized(
 
     `seeds`: DataFrame with a `node` column (subset of edge
     endpoints). Returns (node, rank_scaled, rank)."""
-    edges = edges.localCheckpoint(eager=False)
+    edges = pin(edges, "candidate")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    esrc = edges.join(deg, "src").localCheckpoint(eager=False)
-    nodes = (
+    esrc = pin(edges.join(deg, "src"), "candidate")
+    nodes = pin(
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "candidate",
     )
     seed_set = seeds.select("node").distinct().join(nodes, "node", "left_semi")
     seed_flag = nodes.join(
         seed_set.withColumn("_is_seed", F.lit(True)), "node", "left"
     ).select("node", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed"))
-    seed_flag = seed_flag.localCheckpoint(eager=False)
+    seed_flag = pin(seed_flag, "candidate")
     n_seeds = seed_set.agg(F.count(F.lit(1)).alias("_ns"))
     base = (DAMP_DEN - DAMP_NUM) * scale // DAMP_DEN
     rank = seed_flag.withColumn(
@@ -165,7 +169,7 @@ def pagerank_personalized(
         # round (r15): one computation per round, flat plans; node-
         # scale rows (node, r), same class as label_propagation's
         # per-round frontier pin.
-        rank = rank.localCheckpoint(eager=False)
+        rank = pin(rank, "candidate")
         contrib = (
             esrc.join(rank, esrc["src"] == rank["node"])
             .select(F.col("dst").alias("node"), F.expr("r div outdeg").alias("c"))
@@ -221,25 +225,25 @@ def label_propagation(
     (node, label) with label null where nothing reached the node."""
     from pyspark.sql.window import Window
 
-    edges = edges.localCheckpoint(eager=False)
-    nodes = (
+    edges = pin(edges, "candidate")
+    nodes = pin(
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "candidate",
     )
-    seed_l = (
+    seed_l = pin(
         seeds.select("node", F.col("label").alias("_seed"))
         .distinct()
-        .join(nodes, "node", "left_semi")
-        .localCheckpoint(eager=False)
+        .join(nodes, "node", "left_semi"),
+        "candidate",
     )
     labels = nodes.join(seed_l, "node", "left").select(
         "node", F.col("_seed").alias("label")
     )
     w = Window.partitionBy("node").orderBy(F.col("_c").desc(), F.col("label"))
     for _ in range(iters):
-        labels = labels.localCheckpoint(eager=False)
+        labels = pin(labels, "candidate")
         nb = (
             edges.join(
                 labels.filter(F.col("label").isNotNull()).withColumnRenamed(
@@ -283,14 +287,14 @@ def pagerank_weighted(
     Same integer-exact contract and per-round cost as pagerank(); the
     out-weight sum replaces the out-degree (one extra column in the
     same aggregate). Weights must be positive bigints."""
-    edges = edges.localCheckpoint(eager=False)
+    edges = pin(edges, "candidate")
     deg = edges.groupBy("src").agg(F.sum(weight_col).alias("wsum"))
-    esrc = edges.join(deg, "src").localCheckpoint(eager=False)
-    nodes = (
+    esrc = pin(edges.join(deg, "src"), "candidate")
+    nodes = pin(
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "candidate",
     )
     rank = nodes.withColumn("r", F.lit(scale).cast("long"))
     base = (DAMP_DEN - DAMP_NUM) * scale // DAMP_DEN
@@ -416,6 +420,8 @@ def ancestor_rollup(
     library callers that build plans they may not execute should pass
     check_convergence=False and prove the depth bound elsewhere.
     """
+    # the hierarchy frontier: one row per node of the hierarchy table,
+    # halving depth per round
     a = nodes.select(
         F.col(id_col).alias("id"),
         F.when(
@@ -431,21 +437,21 @@ def ancestor_rollup(
         .otherwise(F.lit(1))
         .cast("bigint")
         .alias("dist"),
-    ).localCheckpoint(eager=False)
+    )
+    a = pin(a, "candidate")
     for _ in range(rounds):
         hop = a.select(
             F.col("id").alias("_hid"),
             F.col("anc").alias("_hanc"),
             F.col("dist").alias("_hdist"),
         )
-        a = (
-            a.join(hop, a.anc == hop._hid)
-            .select(
+        a = pin(
+            a.join(hop, a.anc == hop._hid).select(
                 "id",
                 F.col("_hanc").alias("anc"),
                 (F.col("dist") + F.col("_hdist")).cast("bigint").alias("dist"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            "candidate",
         )
     if check_convergence:
         roots = nodes.filter(

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.html import text_preview
 from ..functions.provenance import append_rendered_token, append_source_token
+from ..pin import pin
 from .decide import decide
 from .enqueue import QUEUE_KEY, dequeue, select_batch
 from .fetch import fetch_smart, make_render_udf
@@ -33,6 +34,12 @@ DECIDE_COLS = (
     "host", "is_agg", "canonical", "jsonld", "og_site", "h1", "og_title",
     "title", "ats_slug_company", "company", "role", "conf", "decision",
 )
+
+# Why drain_all's corpus-scale pins have no opt-out: the tiered
+# fetch/LLM UDFs upstream are side-effecting (rate-limited external
+# calls, S7-S12), and lineage recomputation would re-fire them with
+# different results.
+DRAIN_PIN_REASON = "side-effecting fetch/LLM calls must run exactly once per drain cycle"
 
 
 def escalate_weak_parses(parsed: DataFrame, renderer_client) -> DataFrame:
@@ -91,11 +98,11 @@ def parse_batch(
     fetched = all_fetched.filter(F.col("fetch_error") == "").withColumn(
         "final_url", F.coalesce(F.nullif(F.col("final_url"), F.lit("")), F.col("url"))
     )
-    # checkpoint between mega-stages: each of decide/escalate/rescue
-    # is itself a wide expression tree; truncating lineage keeps
+    # pin one fetch batch between mega-stages: each of decide/escalate/
+    # rescue is itself a wide expression tree; truncating lineage keeps
     # Catalyst's optimization time linear in pipeline length
-    decided = decide(fetched, html_col="html", url_col="final_url").localCheckpoint(eager=True)
-    parsed = escalate_weak_parses(decided, renderer_client).localCheckpoint(eager=True)
+    decided = pin(decide(fetched, html_col="html", url_col="final_url"), "bounded", eager=True)
+    parsed = pin(escalate_weak_parses(decided, renderer_client), "bounded", eager=True)
     if llm_client is not None:
         parsed = parsed.withColumn("body_preview", text_preview(F.col("html"), 2000))
         parsed = llm_rescue(parsed, llm_client)
@@ -230,9 +237,12 @@ def drain_all(
     reference stops at a 285 s wall-clock budget (Apps Script cap) —
     an orchestration concern; here max_cycles bounds work instead.
 
-    Each cycle materializes its outputs via localCheckpoint so the
-    logical plan stays O(1) in cycle count (ST2's incremental-batch
-    semantics, not one giant lazy graph).
+    Each cycle pins its outputs (``DRAIN_PIN_REASON``) so the logical
+    plan stays O(1) in cycle count (ST2's incremental-batch semantics,
+    not one giant lazy graph). The tracker/queue/notes_queue snapshots
+    are table-scale — the reference's tracker is a spreadsheet;
+    warehouse-scale trackers take merge_writeback_incremental's
+    O(batch) partition path instead of this in-memory hand-off.
     """
     from ..schemas import NOTES_QUEUE_SCHEMA
 
@@ -247,8 +257,8 @@ def drain_all(
             out = parse_batch(
                 tracker, queue, http_client, renderer_client, llm_client, batch_size
             )
-            tracker = out["tracker"].localCheckpoint(eager=True)
-            queue = out["queue"].localCheckpoint(eager=True)
+            tracker = pin(out["tracker"], "corpus", eager=True, reason=DRAIN_PIN_REASON)
+            queue = pin(out["queue"], "corpus", eager=True, reason=DRAIN_PIN_REASON)
             # two-phase hand-off (ST7): new notes work enters the
             # notes queue idempotently (J2 anti-join on the key)
             fresh = out["notes_candidates"].join(
@@ -257,15 +267,19 @@ def drain_all(
                 QUEUE_KEY,
                 "left_anti",
             ).select(*notes_queue.columns)
-            notes_queue = notes_queue.unionByName(fresh).localCheckpoint(eager=True)
+            notes_queue = pin(
+                notes_queue.unionByName(fresh), "corpus", eager=True, reason=DRAIN_PIN_REASON
+            )
         if not notes_queue.filter(F.col("status") == "queued").isEmpty():
             did_work = True
             out = notes_batch(
                 tracker, notes_queue, http_client, renderer_client,
                 llm_client, profile, notes_batch_size,
             )
-            tracker = out["tracker"].localCheckpoint(eager=True)
-            notes_queue = out["notes_queue"].localCheckpoint(eager=True)
+            tracker = pin(out["tracker"], "corpus", eager=True, reason=DRAIN_PIN_REASON)
+            notes_queue = pin(
+                out["notes_queue"], "corpus", eager=True, reason=DRAIN_PIN_REASON
+            )
         if not did_work:
             break
     return {"tracker": tracker, "queue": queue, "notes_queue": notes_queue}

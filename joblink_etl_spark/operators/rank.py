@@ -25,6 +25,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..pin import pin
+
+# Why grouped_rank's corpus-scale pin has no opt-out: the counts pass
+# and the offsets pass both read spark_partition_id(), and a
+# recomputation could re-sample the range boundaries and renumber
+# partitions between them, silently corrupting ranks.
+GROUPED_RANK_PIN_REASON = "both rank passes must see one range partitioning"
+
 
 def grouped_rank(
     df: DataFrame,
@@ -50,32 +58,25 @@ def grouped_rank(
 
     Bounded-action contract as global_rank (one counts action at
     call time). Unlike global_rank's caller-released persist pin,
-    the range exchange here is pinned with an EAGER localCheckpoint:
+    the range exchange here is pinned with an EAGER ``pin()``
+    (``GROUPED_RANK_PIN_REASON``; fault-tolerance tradeoff: ``pin()``):
     the offset counts and the ranking pass must see the same sampled
     range boundaries (a recompute would re-sample), but callers like
     spearman_by_group invoke this twice per query and hold the
     result lazily — a persist they must release leaks pinned
-    partitions in practice. localCheckpoint truncates the lineage at
-    materialized blocks whose lifetime is tied to the RDD reference
+    partitions in practice. A local checkpoint truncates the lineage
+    at materialized blocks whose lifetime is tied to the RDD reference
     (the ContextCleaner reclaims them on GC), so repeated calls
     don't accumulate cache entries.
-
-    Fault-tolerance tradeoff: truncated lineage means losing an
-    executor that holds checkpoint blocks mid-query fails the job
-    unrecoverably instead of recomputing — fine on local[n] and for
-    short jobs, a real regression for long cluster-scale jobs on
-    preemptible executors. There, prefer reliable checkpointing
-    (`sc.setCheckpointDir` + `.checkpoint()`, blocks on
-    fault-tolerant storage) or an owner-managed persist/unpersist
-    over this convenience pinning.
     """
     spark = df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism
     keys = [F.col(c) for c in (*group_cols, *order_cols)]
-    part = (
-        df.repartitionByRange(n, *keys)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    part = pin(
+        df.repartitionByRange(n, *keys).withColumn("_pid", F.spark_partition_id()),
+        "corpus",
+        eager=True,
+        reason=GROUPED_RANK_PIN_REASON,
     )
     counts = (
         part.groupBy("_pid", *group_cols)

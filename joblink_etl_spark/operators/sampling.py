@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from .dedup import md5_int
 
 BUCKETS = 10_000
@@ -718,18 +719,10 @@ def cluster_balanced_sample(
     # un-barriered plan executes that chain once per branch. Narrow
     # projection first so the checkpoint stores two columns, not the
     # caller's whole relation; eager=False keeps construction
-    # action-free.
-    # TRADEOFF (pin census): the projection is still CORPUS-SCALE
-    # (one narrow row per input row) — localCheckpoint severs lineage
-    # (executor loss after the pin fails the job) and the blocks must
-    # fit executor-local storage. At the 100 TB design point pass
-    # pin_assign=False (recompute-per-branch, lineage-recoverable) or
-    # persist the assignment to a reliable store; the pin is the
-    # right default for single-node / modest-corpus use (same
-    # contract as bm25_rank's pin_tf).
-    assigned = assigned.select(id_col, cell_col)
-    if pin_assign:
-        assigned = assigned.localCheckpoint(eager=False)
+    # action-free. The projection is still CORPUS-SCALE (one narrow
+    # row per input row); pin_assign=False keeps the lineage-
+    # recoverable plan (tradeoff: pin()).
+    assigned = pin(assigned.select(id_col, cell_col), "corpus", enabled=pin_assign)
 
     quotas = waterfill_allocation(
         assigned.select(F.col(cell_col).alias("grp")), "grp", budget

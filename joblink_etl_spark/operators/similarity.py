@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..pin import pin
+
 
 def as_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
@@ -593,12 +595,12 @@ def kmeans_codes_2level(
                 F.array_sort(F.collect_list(F.struct("_pos", "_m"))), lambda s: s["_m"]
             ).alias("_cv")
         )
-        # lazy localCheckpoint (r9, the _pq_train recipe): the pin
-        # must also TRUNCATE the logical plan so each Lloyd
-        # iteration's analysis stops re-walking all prior
-        # iterations' grouped-assign HOF trees; ≤ K rows per pin,
-        # bounded build-time jobs under AQE (documented tradeoff)
-        cents_g = new_cents.join(grp, "_cid").localCheckpoint(eager=False)
+        # lazy pin (r9, the _pq_train recipe): the pin must also
+        # TRUNCATE the logical plan so each Lloyd iteration's analysis
+        # stops re-walking all prior iterations' grouped-assign HOF
+        # trees; ≤ K rows per pin, bounded build-time jobs under AQE
+        # (documented tradeoff)
+        cents_g = pin(new_cents.join(grp, "_cid"), "bounded")
     final = _kmeans_assign_grouped(pts, cents_g, codes_col)
     # lazy persist: the two-level chain is many small stages (coarse
     # window, grouping assigns, broadcast group arrays) — consumers
@@ -800,7 +802,7 @@ def _pq_train(
     GC-reclaimed with the RDD reference.
 
     BOUNDED-ACTION NOTE (r9): the per-iteration pins are lazy
-    localCheckpoints, which under AQE run the iteration's jobs at
+    ``pin()`` calls, which under AQE run the iteration's jobs at
     BUILD time (same documented tradeoff as semdedup's barrier) —
     callers of the pq family are exempt from the action-free
     construction test. The checkpoint (unlike persist) truncates the
@@ -820,18 +822,21 @@ def _pq_train(
         means = by_dim.groupBy("sub", "_cid", "_pos").agg(
             F.floor(F.sum("_v").cast("double") / F.count(F.lit(1))).cast("int").alias("_m")
         )
-        # lazy localCheckpoint, not persist: the pin must also
-        # TRUNCATE the logical plan — each Lloyd iteration otherwise
+        # lazy pin, not persist: the pin must also TRUNCATE the
+        # logical plan — each Lloyd iteration otherwise
         # re-analyzes the whole HOF-heavy assign tree of every prior
         # iteration (the round-8 semdedup barrier class), and with
         # 2 consumers per cents (next assign + final encode) Catalyst
         # planning dominated knn_ivfpq's wall-clock. ≤ n_sub × K rows
         # per pin; blocks are GC-reclaimed with the RDD reference.
-        cents = means.groupBy("sub", "_cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_pos", "_m"))), lambda s: s["_m"]
-            ).alias("_cv")
-        ).localCheckpoint(eager=False)
+        cents = pin(
+            means.groupBy("sub", "_cid").agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("_pos", "_m"))), lambda s: s["_m"]
+                ).alias("_cv")
+            ),
+            "bounded",
+        )
     return cents
 
 
@@ -1352,19 +1357,14 @@ def semdedup(
     # without the barrier the whole quantize+Lloyd+assign chain
     # re-executes once per consumer (measured ~2.5x wall-clock on
     # the bench tail before the r13 exists-prune rewrite).
-    # TRADEOFF (pin census): with_c is CORPUS-SCALE (one row per
-    # vector: id, codes, cluster, norm) — a localCheckpoint
-    # materializes it to executor-local blocks and severs lineage, so
-    # an executor loss after the pin fails the job instead of
-    # recomputing, and the blocks must fit local storage. At the
-    # 100 TB design point pass pin_assign=False (recompute-per-
-    # consumer, fully lineage-recoverable) or persist the assignment
-    # to a reliable store between stages; the pin is the right
-    # default for single-node / modest-corpus use (same contract as
-    # bm25_rank's pin_tf).
-    with_c = codes.join(clusters, id_col).withColumn("_n2", sq(F.col("q_codes")))
-    if pin_assign:
-        with_c = with_c.localCheckpoint(eager=False)
+    # with_c is CORPUS-SCALE (one row per vector: id, codes, cluster,
+    # norm); pin_assign=False keeps the lineage-recoverable plan
+    # (tradeoff: pin()).
+    with_c = pin(
+        codes.join(clusters, id_col).withColumn("_n2", sq(F.col("q_codes"))),
+        "corpus",
+        enabled=pin_assign,
+    )
     # Within-cluster prune as ONE collect + short-circuiting exists
     # (r13 — replaces the cluster self-join + distinct + keep/prune
     # left join, ~35% of the query's exec): each cluster's peers

@@ -49,6 +49,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..pin import pin
+
 
 def _gram_hashes(
     df: DataFrame, k: int, text_col: str, id_col: str, spread: bool = True
@@ -241,14 +243,14 @@ def span_unit_repeats(
     # ReusedExchange — without a pin the whole candidate-generation
     # lineage (corpus gram explode + window span-merge + global top-n)
     # executes once per broadcast (verified in the r15 plan dumps: the
-    # broadcast-once spelling alone left 2 full subtrees). The lazy
-    # checkpoint cuts that lineage once at ≤top_n rows; both
+    # broadcast-once spelling alone left 2 full subtrees). The lazy pin
+    # cuts that lineage once at ≤top_n rows; both
     # broadcasts then rebuild from the checkpointed partitions.
     # Construction runs the chain's jobs (AQE materializes lazy
     # checkpoints at .rdd) — span_unit_repeats is on the
     # CONSTRUCTION_JOB_EXEMPT list like every other barrier pin. The
     # dedup still sees only the narrow (id, span_md5) keys (r14).
-    cands_b = F.broadcast(cands.localCheckpoint(eager=False))
+    cands_b = F.broadcast(pin(cands, "bounded"))
     matched = (
         doc_grams.join(cands_b, doc_grams["g"] == F.col("first_g"))
         # fresh attribute for the pair key: the narrow row would
@@ -577,14 +579,14 @@ def scrub_repeated_spans(
     # per cut span). Same class as the winnowing fps / bm25 tf
     # barriers; eager=False still runs bounded build-time jobs under
     # AQE — keep callers out of test_plans' action-free list.
-    cuts = (
+    cuts = pin(
         spans.select(
             id_col, "span_start", "span_len", F.md5("span_text").alias("span_md5")
         )
         .withColumn("keep_doc", F.min(id_col).over(keeper))
         .filter(F.col(id_col) != F.col("keep_doc"))
-        .select(id_col, "span_start", "span_len")
-        .localCheckpoint(eager=False)
+        .select(id_col, "span_start", "span_len"),
+        "candidate",
     )
     w = Window.partitionBy(id_col).orderBy("span_start")
     seg_start = F.coalesce(
@@ -788,12 +790,13 @@ def winnowing_pairs(
     # (similarity.py:1372); like it, eager=False still runs the
     # checkpointed stage's jobs at BUILD time under AQE — a bounded,
     # documented construction-time cost, so this builder must not
-    # join test_plans' action-free list.
-    fps = (
+    # join test_plans' action-free list. Candidate scale: ~N_tokens/w
+    # sampled grams per doc.
+    fps = pin(
         minimizer_fingerprints(df, k, w, text_col, id_col)
         .select(F.col(id_col).alias("id"), "fp")
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "candidate",
     )
     if max_df is not None:
         keep = (

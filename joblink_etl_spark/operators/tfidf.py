@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from .textstats import tokens
 
 IDF_SCALE = 10_000
@@ -199,18 +200,11 @@ def bm25_rank(
     Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl)) over shared
     terms (binary query-term weights — the standard simplification).
 
-    ``pin_tf`` (default True) localCheckpoints the term-frequency
-    relation so its tokenize+explode+groupBy chain runs ONCE instead
-    of once per consumer (~30-46% at sf0.1 across the bm25 family).
-    TRADEOFF (ADVICE r10): tf is an O(doc, distinct-token) CORPUS-SCALE
-    relation — unlike the bounded cut-list/fingerprint pins elsewhere —
-    and a localCheckpoint materializes it to executor-local block
-    storage and severs lineage, so an executor loss after the pin
-    fails the job instead of recomputing (and the blocks must fit the
-    cluster's local storage). At the 100 TB design point, prefer
-    ``pin_tf=False`` (recompute-per-consumer, fully lineage-recoverable)
-    or persist tf to a reliable store between stages; the pin is the
-    right default for single-node / modest-corpus interactive use.
+    ``pin_tf`` (default True) pins the term-frequency relation so its
+    tokenize+explode+groupBy chain runs ONCE instead of once per
+    consumer (~30-46% at sf0.1 across the bm25 family). tf is an
+    O(doc, distinct-token) CORPUS-SCALE relation, so ``pin_tf=False``
+    keeps the lineage-recoverable plan (tradeoff: ``pin()``).
 
     Determinism: each per-(doc, term) contribution is quantized to a
     bigint (floor of the double formula — a fixed chain of IEEE ops
@@ -231,13 +225,13 @@ def bm25_rank(
     # still runs the stage's jobs at BUILD time under AQE (bounded,
     # documented — keep bm25 callers out of test_plans' action-free
     # list).
-    tf = (
+    tf = pin(
         docs.select(F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("token"))
         .groupBy("id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
+        .agg(F.count(F.lit(1)).alias("tf")),
+        "corpus",
+        enabled=pin_tf,
     )
-    if pin_tf:
-        tf = tf.localCheckpoint(eager=False)
     dl = tf.groupBy("id").agg(F.sum("tf").alias("dl"))
     stats = dl.agg(
         (F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")).alias("avgdl")

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.provenance import append_source_token
 from ..functions.text import format_conf
+from ..pin import pin
 
 TRACKER_KEY = ["sheet_name", "row_index"]
 
@@ -110,7 +111,7 @@ def merge_writeback_incremental(
        turns that into partition pruning, so unaffected partitions
        are never even SCANNED (assert via PartitionFilters in the
        plan);
-    3. the merged result is pinned (eager localCheckpoint — bounded:
+    3. the merged result is pinned (eager ``pin()`` — bounded:
        affected partitions only) to cut lineage back to the source
        files, then written with per-write dynamic partition
        overwrite, which replaces ONLY the partitions present in the
@@ -119,15 +120,18 @@ def merge_writeback_incremental(
     At 100 TB: a 12-row batch touches ≤12 partitions of a
     10k-partition tracker — the rewrite is O(batch), not O(table).
 
-    Returns the affected partition values (for audit/logging).
+    Returns the affected partition values (for audit/logging); an
+    empty batch touches nothing and returns [] without reading.
     """
     affected = [
         r[0] for r in parsed.select(partition_col).distinct().collect()
     ]
+    if not affected:
+        return []
     tracker = spark.read.parquet(tracker_path).filter(
         F.col(partition_col).isin(affected)
     )
-    merged = merge_writeback(tracker, parsed).localCheckpoint(eager=True)
+    merged = pin(merge_writeback(tracker, parsed), "bounded", eager=True)
     (
         merged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from ..operators import dedup as D
 from ..operators import similarity as SIM
 from ..operators import textstats as TS
+from ..pin import pin
 from ..sources import parallelize, table
 
 # ---------------------------------------------------------------------------
@@ -3832,12 +3833,9 @@ def scrubbed_corpus_q(
     one logical plan end-to-end. Output per surviving doc:
     (doc_id, n_spans_cut, chars_cut, n_tokens_after).
 
-    ``pin_clean`` (default True) localCheckpoints the decontaminated
-    (doc_id, text) relation — CORPUS-SCALE, so the pin severs lineage
-    and must fit executor-local storage; at the 100 TB design point
-    pass pin_clean=False (recompute-per-reference, lineage-
-    recoverable) or persist the clean corpus to a reliable store
-    between stages (same contract as bm25_rank's pin_tf)."""
+    ``pin_clean`` (default True) pins the decontaminated
+    (doc_id, text) relation, a corpus-scale pin (tradeoff: ``pin()``);
+    pin_clean=False keeps the lineage-recoverable plan."""
     from pyspark.sql.window import Window
 
     from ..operators.decontam import ngram_overlap
@@ -3860,14 +3858,15 @@ def scrubbed_corpus_q(
     # scrub_repeated_spans references its input 3x (span mining, the
     # segment-text join, the final pass-through left join) — without
     # a barrier the whole gates→dedup→decontam chain above re-executes
-    # per reference (the kmeans-barrier class; bench 7.3 s)
-    clean = (
+    # per reference (the kmeans-barrier class; bench 7.3 s). One row
+    # per surviving doc with full text.
+    clean = pin(
         ngram_overlap(canon, bench, n=3, carry=("text",))
         .filter(~F.col("contaminated"))
-        .select("doc_id", "text")
+        .select("doc_id", "text"),
+        "corpus",
+        enabled=pin_clean,
     )
-    if pin_clean:
-        clean = clean.localCheckpoint(eager=False)
     scrubbed = scrub_repeated_spans(clean, k=20, min_docs=2)
     return scrubbed.select(
         "doc_id",
@@ -4629,7 +4628,7 @@ def dedup_method_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_truth",
             "n_found",
             "n_hit",
-            (F.col("n_hit").cast("double") / F.col("n_truth")).alias("recall"),
+            F.try_divide(F.col("n_hit").cast("double"), F.col("n_truth")).alias("recall"),
         )
 
     rows = [
@@ -4725,13 +4724,11 @@ def ann_method_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5)
     # Each leg below references truth/found 2-3x (count aggs + the
     # hit semi-join), and Catalyst re-executes a referenced chain per
-    # reference — the kmeans-barrier class (r8 lesson). Lazy
-    # localCheckpoint pins each expensive scored relation so its
-    # chain runs ONCE; construction stays action-free.
-    truth = (
-        _bf(emb, queries, k=10)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
+    # reference — the kmeans-barrier class (r8 lesson). A lazy pin
+    # on each expensive scored relation (k neighbors x 5 queries) runs
+    # its chain ONCE; construction stays action-free.
+    truth = pin(
+        _bf(emb, queries, k=10).select("query_id", "neighbor_id"), "bounded"
     )
 
     codes = quantize_embeddings_global(emb).select("vec_id", "q_codes")
@@ -4776,7 +4773,7 @@ def ann_method_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_truth",
             "n_found",
             "n_hit",
-            (F.col("n_hit").cast("double") / F.col("n_truth")).alias("recall"),
+            F.try_divide(F.col("n_hit").cast("double"), F.col("n_truth")).alias("recall"),
         )
         rows = row if rows is None else rows.unionByName(row)
     return rows
@@ -5655,11 +5652,13 @@ def web_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the line-dedup chain feeds three consumers (encoding gate,
     # gopher gate, the annotation join) — barrier it so the chain
     # runs once per action instead of once per consumer (solo-warm
-    # median 8.2 -> 7.6 s; the kmeans-barrier class)
-    txt = (
-        line_level_dedup(crawl, max_docs=20)
-        .select("doc_id", F.col("clean_text").alias("text"))
-        .localCheckpoint(eager=False)
+    # median 8.2 -> 7.6 s; the kmeans-barrier class). Line-dedup
+    # output of a max_docs=20 synthetic crawl.
+    txt = pin(
+        line_level_dedup(crawl, max_docs=20).select(
+            "doc_id", F.col("clean_text").alias("text")
+        ),
+        "bounded",
     )
     enc = TS.encoding_artifacts(txt).select("doc_id", "clean")
     # tuned gate: the synthetic vocabulary carries only ONE of the
@@ -6517,7 +6516,7 @@ def ivf_nprobe_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_truth",
                 "n_found",
                 "n_hit",
-                (F.col("n_hit").cast("double") / F.col("n_truth")).alias("recall"),
+                F.try_divide(F.col("n_hit").cast("double"), F.col("n_truth")).alias("recall"),
             )
         )
         rows = row if rows is None else rows.unionByName(row)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as D
 from ..operators import graph as G
+from ..pin import pin
 from . import ext_q as E
 
 # ---------------------------------------------------------------------------
@@ -137,10 +138,12 @@ def ppr_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # barrier the minhash front end HERE: pagerank_personalized pins
     # its own edges arg, but the seed set below also derives from
     # pairs — without this the whole shingle+signature+band chain
-    # re-executes for the seed relation (solo 7.4 -> 6.2 s)
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).localCheckpoint(eager=False)
+    # re-executes for the seed relation (solo 7.4 -> 6.2 s). Candidate
+    # scale: the minhash pair list.
+    edges = pin(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        "candidate",
+    )
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))

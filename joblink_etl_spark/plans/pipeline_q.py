@@ -234,7 +234,9 @@ def writeback_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("direct").alias("provider"),
     )
     merge_writeback_incremental(spark, path, parsed)
-    return spark.read.parquet(path).select(
+    # the tracker's schema, not inference: a zero-row tracker writes
+    # no data files to infer from
+    return spark.read.schema(tracker.schema).parquet(path).select(
         "sheet_name", "row_index", "canonical_link",
         "company_auto", "role_auto", "status", "source",
     )

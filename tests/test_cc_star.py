@@ -3,6 +3,8 @@ identical components on the shapes that stress each algorithm."""
 
 from __future__ import annotations
 
+from conftest import job_ids
+
 from joblink_etl_spark.operators import dedup as D
 
 
@@ -72,14 +74,10 @@ class TestIterationJobShape:
         # catch-ups)
         old = spark.conf.get("spark.sql.adaptive.enabled")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        sc = spark.sparkContext
         try:
-            sc.setJobGroup(tag, tag)
-            fn()
+            return len(job_ids(spark, fn, tag))
         finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
             spark.conf.set("spark.sql.adaptive.enabled", old)
-        return len(sc.statusTracker().getJobIdsForGroup(tag))
 
     def test_cc_propagation_jobs_bounded(self, spark):
         # a path of 9 nodes needs 4+ min-label rounds = 2-3 batched
@@ -102,3 +100,12 @@ class TestIterationJobShape:
             spark, lambda: D.connected_components_star(e).collect(), "ccstar-jobs-pin"
         )
         assert n_jobs <= 10, f"CC star ran {n_jobs} jobs"
+
+
+def test_cc_max_iter_is_an_exact_round_cap(spark):
+    # path 1-2-3-4-5: initial labels {1,1,2,3,4}; each propagation
+    # round lowers node 5's label by one
+    e = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
+    labels = {n: _labels(D.connected_components(e, max_iter=n)) for n in (0, 1, 2)}
+    assert labels[0] == {1: 1, 2: 1, 3: 2, 4: 3, 5: 4}
+    assert (labels[1][5], labels[2][5]) == (3, 2)

@@ -8,6 +8,7 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
+from conftest import job_ids
 from pyspark.sql import functions as F
 
 from joblink_etl_spark.plans import relational as R
@@ -289,22 +290,10 @@ def test_builders_run_no_action_at_construction(spark):
     be removed from it."""
     from joblink_etl_spark.plans import registry
 
-    sc = spark.sparkContext
     sf = "/root/testdata/sf0.001"
     triggered = set()
     for name, fn in registry.queries().items():
-        group = f"plan-build-lazy-check-{name}"
-        sc.setJobGroup(group, f"assert no Spark job building {name}")
-        try:
-            fn(spark, sf)
-        finally:
-            for prop in (
-                "spark.jobGroup.id",
-                "spark.job.description",
-                "spark.job.interruptOnCancel",
-            ):
-                sc.setLocalProperty(prop, None)
-        if list(sc.statusTracker().getJobIdsForGroup(group)):
+        if job_ids(spark, lambda: fn(spark, sf), f"plan-build-lazy-check-{name}"):
             triggered.add(name)
         spark.catalog.clearCache()
     unexpected = triggered - CONSTRUCTION_JOB_EXEMPT
@@ -577,3 +566,26 @@ def test_minhash_front_end_never_broadcasts_corpus(spark):
     )
     assert "SortAggregate" not in plan, plan
     spark.catalog.clearCache()
+
+
+def test_zero_row_inputs_collect(spark, tmp_path):
+    """Ratio and read-back queries must return on zero-row tables, not
+    raise: a ratio over an empty denominator is NULL (DuckDB's x/0 is
+    NULL too), and an empty write-back batch reads nothing. collect(),
+    not count(): count() prunes the ratio column away."""
+    import pyarrow.parquet as pq
+
+    from joblink_etl_spark.plans import registry
+
+    for t in ("documents", "embeddings", "customer"):
+        empty = pq.read_table(f"{SF_SMALL}/{t}.parquet").slice(0, 0)
+        pq.write_table(empty, tmp_path / f"{t}.parquet")
+    qs = registry.queries()
+    for name in (
+        "curation_funnel",
+        "dedup_method_recall",
+        "ann_method_recall",
+        "ivf_nprobe_sweep",
+        "writeback_incremental",
+    ):
+        qs[name](spark, str(tmp_path)).collect()

@@ -14,6 +14,7 @@ from __future__ import annotations
 import itertools
 
 import pytest
+from conftest import job_ids
 from pyspark.sql import types as T
 
 # The driver hashes the FIRST 50 registered queries (catalog.py
@@ -662,19 +663,7 @@ def test_bench_py_worker_warmup_runs_real_python_workers(spark):
 
     import bench
 
-    sc = spark.sparkContext
-    group = "py-worker-warmup-check"
-    sc.setJobGroup(group, "bench fence")
-    try:
-        bench._py_worker_warmup(spark)
-    finally:
-        for prop in (
-            "spark.jobGroup.id",
-            "spark.job.description",
-            "spark.job.interruptOnCancel",
-        ):
-            sc.setLocalProperty(prop, None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group))
+    assert job_ids(spark, lambda: bench._py_worker_warmup(spark), "py-worker-warmup-check")
     src = inspect.getsource(bench.main)
     assert src.index("_py_worker_warmup(spark)") < src.index("canary_pre"), (
         "the fence must run before the canary/timed loop"

@@ -126,3 +126,84 @@ def test_ab_probe_args():
     for bad in (["/sf", "q", "--n"], ["/sf", "q", "--ref"], ["/sf", "q", "--nx", "2"], ["/sf"], []):
         with pytest.raises(SystemExit):
             parse_args(bad)
+
+
+def test_staleness_audit_is_green_and_bounded():
+    """The rotation policy's auditability contract (r11 verdict item
+    2): tools/staleness_check.py derives every query's latest
+    driver-green round from the committed CORRECTNESS_r*.json
+    artifacts and must report zero never-checked and zero
+    latest-row-red queries. The max-staleness number is the figure
+    the catalog docstring's bound refers to (6 in steady state; the
+    burn-down backlog clears through r14 per the docstring)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    import joblink_etl_spark
+
+    repo = os.path.dirname(
+        os.path.dirname(os.path.abspath(joblink_etl_spark.__file__))
+    )
+    if not os.path.exists(os.path.join(repo, "CORRECTNESS_r01.json")):
+        import pytest
+
+        pytest.skip("no driver correctness artifacts (fresh checkout)")
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "staleness_check.py")],
+        capture_output=True,
+        text=True,
+        cwd=repo,
+    )
+    assert proc.returncode == 0, proc.stdout + proc.stderr
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["registered"] == 252
+    assert out["never_driver_checked"] == []
+    assert out["latest_row_not_green"] == []
+    assert out["max_staleness_rounds"] is not None
+
+
+def test_broadcast_audit_fixed_queries_stay_clean(spark):
+    """Fast regression slice of tools/broadcast_audit.py: the three
+    queries whose misestimated corpus-scale broadcasts the r12 x100
+    audit caught (incremental substring dedup's gram index,
+    nb_classify's exploded feature re-join, interval_join's exploded
+    interval side) must plan with ZERO generate-class broadcasts, and
+    the two whitelisted contract-bounded cases must stay the only
+    generate-class carriers in this set. Runs against sf0.001 —
+    the detection is structural (explode inside a broadcast subtree
+    with no bounding node), so it holds at any SF for these plans."""
+    import os
+    import sys
+
+    import joblink_etl_spark
+    from joblink_etl_spark.plans import registry
+
+    repo = os.path.dirname(
+        os.path.dirname(os.path.abspath(joblink_etl_spark.__file__))
+    )
+    sys.path.insert(0, os.path.join(repo, "tools"))
+    from broadcast_audit import WHITELIST, generate_class_broadcasts
+
+    # formatted: the mode the tool itself scans since r14 (it also
+    # prints subquery plan trees — see tests/test_tools.py)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    qs = registry.queries()
+    fixed = (
+        "incremental_repeat_spans",
+        "nb_classify",
+        "interval_join",
+        "fuzzy_key_join",
+        "record_linkage",
+    )
+    for name in fixed:
+        plan = qs[name](spark, "/root/testdata/sf0.001")._jdf.queryExecution().explainString(mode)
+        assert generate_class_broadcasts(plan) == 0, (
+            f"{name}: a generate-class broadcast came back — re-check "
+            "the merge hint / carry-through-explode fix"
+        )
+    for name in WHITELIST:
+        assert name in qs, f"whitelist entry {name} no longer registered"
