@@ -9,14 +9,21 @@ are order-independent and the driver's DuckDB value-hash check can be
 bit-exact. A float spelling would wobble in the last ulp across
 partition orders (the session_windows lesson).
 
+One ``pagerank`` carries both the uniform and the edge-weighted rank
+(``weight_col=None`` is unit weights). The rank loops share their
+step bodies: ``_nodes`` (pinned edges and node set, also used by
+label propagation), ``_rank_inputs`` (adds the pinned Σw out-weight
+join) and ``_contrib`` (one round's contribution sum). Each loop
+keeps its own driver — a fixed-count ``for`` — and its own update.
+
 Scale design: each iteration is ONE keyed shuffle (groupBy dst of the
 contribution sum) plus a broadcast-eligible join back to the node set;
 the edge set never grows. Ranks are 8 bytes/node. Iterations are
 sequential barriers by nature (same as Lloyd's in similarity.py) and
 parallelize linearly within each round. For 100 TB-scale graphs the
 edge DataFrame arrives pre-partitioned by src; pinning edges+degrees
-across rounds (done below; fault-tolerance tradeoff: ``pin()``) keeps
-the per-round cost to the contribution shuffle only.
+across rounds (``_rank_inputs``; fault-tolerance tradeoff: ``pin()``)
+keeps the per-round cost to the contribution shuffle only.
 
 The reference has no graph operator — this extends the dedup layer
 (candidate pairs from minhash/LSH are an undirected similarity graph;
@@ -42,62 +49,94 @@ def symmetrize(pairs: DataFrame, a: str = "id_a", b: str = "id_b") -> DataFrame:
     return fwd.unionAll(rev).distinct()
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = 3,
-    scale: int = SCALE,
-) -> DataFrame:
-    """Integer-exact damped PageRank over a directed edge list.
-
-    ``edges``: (src, dst). Returns (node, rank_scaled, rank) where
-    rank_scaled is the exact bigint fixed-point rank (initial mass
-    ``scale`` per node) and rank is the single final IEEE division
-    rank_scaled / scale (deterministic — one op on exact inputs).
-
-    Dangling nodes: a symmetrized similarity graph has none (every
-    node has out-edges); for general graphs the standard dangling-mass
-    redistribution would add one broadcast scalar per round.
-    """
-    # LAZY pin (not persist): the edge set is typically derived from
-    # a large upstream plan (minhash banding); the rank recursion
-    # references it 2 + iters times, and without lineage truncation
+def _nodes(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(pinned edges, pinned node set) — every endpoint once."""
+    # LAZY pins (not persist): the edge set is typically derived from
+    # a large upstream plan (minhash banding); the rank/label recursion
+    # references it every round, and without lineage truncation
     # Catalyst re-optimizes the full upstream tree inside every
     # reference (measured 14.4 s → ~5 s at sf0.1 — the same fix
     # connected_components uses). Construction stays action-free.
     # Candidate scale: repo callers feed candidate-pair graphs; for
     # web-scale graphs see pin()'s reliable-checkpoint note.
     edges = pin(edges, "candidate")
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # contribution an edge carries per round = rank(src) div outdeg(src)
-    esrc = pin(edges.join(deg, "src"), "candidate")
     nodes = pin(
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
         .distinct(),
         "candidate",
     )
+    return edges, nodes
+
+
+def _rank_inputs(edges: DataFrame, w: str) -> tuple[DataFrame, DataFrame]:
+    """(esrc, nodes): each pinned edge carries its source's out-weight
+    sum ``wsum`` = Σw over the source's out-edges (the out-degree
+    under unit weights ``"1L"``)."""
+    edges, nodes = _nodes(edges)
+    deg = edges.groupBy("src").agg(F.sum(F.expr(w)).alias("wsum"))
+    return pin(edges.join(deg, "src"), "candidate"), nodes
+
+
+def _contrib(esrc: DataFrame, rank: DataFrame, w: str) -> DataFrame:
+    """(node, csum): the rank mass a round sends into each node — every
+    edge carries (r(src) · w) div Σw_out(src)."""
+    return (
+        esrc.join(rank, esrc["src"] == rank["node"])
+        .select(F.col("dst").alias("node"), F.expr(f"(r * {w}) div wsum").alias("c"))
+        .groupBy("node")
+        .agg(F.sum("c").alias("csum"))
+    )
+
+
+def _ranked(rank: DataFrame, scale: int) -> DataFrame:
+    return rank.select(
+        "node",
+        F.col("r").alias("rank_scaled"),
+        (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"),
+    )
+
+
+def pagerank(
+    edges: DataFrame,
+    iters: int = 3,
+    scale: int = SCALE,
+    weight_col: str | None = None,
+) -> DataFrame:
+    """Integer-exact damped PageRank over a directed edge list.
+
+    ``edges``: (src, dst[, weight_col]). Returns (node, rank_scaled,
+    rank) where rank_scaled is the exact bigint fixed-point rank
+    (initial mass ``scale`` per node) and rank is the single final
+    IEEE division rank_scaled / scale (deterministic — one op on exact
+    inputs).
+
+    A node's rank splits across its out-edges proportionally to
+    integer edge weights: contribution = (rank · w) div Σw_out.
+    ``weight_col=None`` means unit weights, i.e. the uniform split
+    rank div outdeg. With candidate graphs the natural weight is the
+    quantized similarity (jaccard × 10⁴ as bigint), so strong
+    near-duplicates pull more rank mass than borderline pairs.
+    Weights must be positive bigints.
+
+    Dangling nodes: a symmetrized similarity graph has none (every
+    node has out-edges); for general graphs the standard dangling-mass
+    redistribution would add one broadcast scalar per round (see
+    pagerank_personalized).
+    """
+    w = weight_col or "1L"
+    esrc, nodes = _rank_inputs(edges, w)
     rank = nodes.withColumn("r", F.lit(scale).cast("long"))
     base = (DAMP_DEN - DAMP_NUM) * scale // DAMP_DEN
     for _ in range(iters):
-        contrib = (
-            esrc.join(rank, esrc["src"] == rank["node"])
-            .select(F.col("dst").alias("node"), F.expr("r div outdeg").alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("csum"))
-        )
-        rank = nodes.join(contrib, "node", "left").select(
+        rank = nodes.join(_contrib(esrc, rank, w), "node", "left").select(
             "node",
             (
                 F.lit(base).cast("long")
                 + F.expr(f"({DAMP_NUM} * coalesce(csum, 0L)) div {DAMP_DEN}")
             ).alias("r"),
         )
-    out = rank.select(
-        F.col("node"),
-        F.col("r").alias("rank_scaled"),
-        (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"),
-    )
-    return out
+    return _ranked(rank, scale)
 
 
 def degree_stats(edges: DataFrame) -> DataFrame:
@@ -138,15 +177,7 @@ def pagerank_personalized(
 
     `seeds`: DataFrame with a `node` column (subset of edge
     endpoints). Returns (node, rank_scaled, rank)."""
-    edges = pin(edges, "candidate")
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    esrc = pin(edges.join(deg, "src"), "candidate")
-    nodes = pin(
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct(),
-        "candidate",
-    )
+    esrc, nodes = _rank_inputs(edges, "1L")
     seed_set = seeds.select("node").distinct().join(nodes, "node", "left_semi")
     seed_flag = nodes.join(
         seed_set.withColumn("_is_seed", F.lit(True)), "node", "left"
@@ -160,7 +191,7 @@ def pagerank_personalized(
             F.lit(0).cast("long")
         ),
     ).select("node", "r")
-    has_out = deg.select(F.col("src").alias("node"))
+    has_out = esrc.select(F.col("src").alias("node")).distinct()
     for _ in range(iters):
         # rank is referenced TWICE per round (contribution join +
         # dangling-mass anti-join), and unlike uniform pagerank the
@@ -170,12 +201,7 @@ def pagerank_personalized(
         # scale rows (node, r), same class as label_propagation's
         # per-round frontier pin.
         rank = pin(rank, "candidate")
-        contrib = (
-            esrc.join(rank, esrc["src"] == rank["node"])
-            .select(F.col("dst").alias("node"), F.expr("r div outdeg").alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("csum"))
-        )
+        contrib = _contrib(esrc, rank, "1L")
         dang = (
             rank.join(has_out, "node", "left_anti")
             .agg(F.coalesce(F.sum("r"), F.lit(0)).alias("_dsum"))
@@ -197,11 +223,7 @@ def pagerank_personalized(
                 ).alias("r"),
             )
         )
-    return rank.select(
-        "node",
-        F.col("r").alias("rank_scaled"),
-        (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"),
-    )
+    return _ranked(rank, scale)
 
 
 def label_propagation(
@@ -225,13 +247,7 @@ def label_propagation(
     (node, label) with label null where nothing reached the node."""
     from pyspark.sql.window import Window
 
-    edges = pin(edges, "candidate")
-    nodes = pin(
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct(),
-        "candidate",
-    )
+    edges, nodes = _nodes(edges)
     seed_l = pin(
         seeds.select("node", F.col("label").alias("_seed"))
         .distinct()
@@ -269,57 +285,6 @@ def label_propagation(
             )
         )
     return labels
-
-
-def pagerank_weighted(
-    edges: DataFrame,
-    iters: int = 2,
-    scale: int = SCALE,
-    weight_col: str = "w",
-) -> DataFrame:
-    """Edge-WEIGHTED PageRank: a node's rank splits across its
-    out-edges proportionally to integer edge weights instead of
-    uniformly — contribution = (rank · w) div Σw_out. With candidate
-    graphs the natural weight is the quantized similarity (jaccard ×
-    10⁴ as bigint), so strong near-duplicates pull more rank mass
-    than borderline pairs.
-
-    Same integer-exact contract and per-round cost as pagerank(); the
-    out-weight sum replaces the out-degree (one extra column in the
-    same aggregate). Weights must be positive bigints."""
-    edges = pin(edges, "candidate")
-    deg = edges.groupBy("src").agg(F.sum(weight_col).alias("wsum"))
-    esrc = pin(edges.join(deg, "src"), "candidate")
-    nodes = pin(
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct(),
-        "candidate",
-    )
-    rank = nodes.withColumn("r", F.lit(scale).cast("long"))
-    base = (DAMP_DEN - DAMP_NUM) * scale // DAMP_DEN
-    for _ in range(iters):
-        contrib = (
-            esrc.join(rank, esrc["src"] == rank["node"])
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(f"(r * {weight_col}) div wsum").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("csum"))
-        )
-        rank = nodes.join(contrib, "node", "left").select(
-            "node",
-            (
-                F.lit(base).cast("long")
-                + F.expr(f"({DAMP_NUM} * coalesce(csum, 0L)) div {DAMP_DEN}")
-            ).alias("r"),
-        )
-    return rank.select(
-        "node",
-        F.col("r").alias("rank_scaled"),
-        (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"),
-    )
 
 
 def triangle_counts(edges: DataFrame, a: str = "id_a", b: str = "id_b") -> DataFrame:

@@ -117,10 +117,7 @@ def sample_centroids(
     (ids < every·max_centroids): the classic fixed-nlist IVF, whose
     assign is O(N·K) — linear in the corpus — at the price of larger
     cells as N grows (the nprobe sweep uses this spelling)."""
-    keep = F.col(id_col) % every == 0
-    if max_centroids is not None:
-        keep = keep & (F.col(id_col) < every * max_centroids)
-    return vectors.filter(keep).select(
+    return vectors.filter(_seeds(id_col, every, max_centroids)).select(
         F.col(id_col).alias("centroid_id"), F.col(vec_col)
     )
 
@@ -429,8 +426,14 @@ def cosine_near_dup_pairs_lsh(
     )
 
 
+# --- shared step bodies of the integer Lloyd/PQ/centroid builders ------
+# Every builder below is spelled from these kernels; each Lloyd loop
+# is one line of kernel calls plus its own lineage cut.
+
+
 def _sq_dist(codes: Column, cv: Column) -> Column:
-    """Exact bigint squared distance between two int-code arrays."""
+    """Exact bigint squared distance between two int-code arrays
+    (codes are int8-range, so the int difference cannot overflow)."""
     return F.aggregate(
         F.zip_with(codes, cv, lambda a, b: ((a - b).cast("bigint") * (a - b).cast("bigint"))),
         F.lit(0).cast("bigint"),
@@ -438,51 +441,62 @@ def _sq_dist(codes: Column, cv: Column) -> Column:
     )
 
 
-def _kmeans_assign(vectors: DataFrame, cents: DataFrame, id_col: str, codes_col: str) -> DataFrame:
-    """Nearest centroid per vector by exact integer squared distance,
-    as a PURE SCAN-SIDE PROJECTION: the K centroids collapse into ONE
-    broadcast row (sorted array of (cid, cv) structs), and the winner
-    is array_min over (d2, cid) structs — struct ordering gives the
-    same smallest-distance-then-smallest-cid tie-break a row_number
-    window would, with NO ×K row explosion, NO per-vector shuffle,
-    and NO sort. (The previous crossJoin-per-centroid + window
-    spelling cost ~4 tiny AQE stages per Lloyd iteration; at local
-    scale the query was stage-latency-bound — 22 jobs for 2000 rows.
-    Same fix as the LSH plane rewrite, see PERF.md. A statically
-    unrolled distance tree was measured SLOWER than the HOF fold —
-    codegen compile time swamps interpreted-fold overhead.)"""
-    cents_row = cents.groupBy().agg(
+def _seeds(id_col: str, every: int, cap: int | None) -> Column:
+    """Deterministic seed rule: every ``every``-th id; with a ``cap``
+    only ids below every·cap, so at most ``cap`` seeds however large
+    the corpus grows."""
+    keep = F.col(id_col) % every == 0
+    if cap is not None:
+        keep = keep & (F.col(id_col) < every * cap)
+    return keep
+
+
+def _derive_k_cap(
+    vectors: DataFrame, k_cap: int | None, cell_target: int | None, k_min: int
+) -> int | None:
+    """``k_cap``, or with ``cell_target`` the derived cap
+    max(k_min, ceil(n / cell_target)) from ONE bounded corpus count at
+    plan-build time (the deliberate exception to action-free
+    construction). The two are mutually exclusive."""
+    if cell_target is None:
+        return k_cap
+    if k_cap is not None:
+        raise ValueError("pass either k_cap or cell_target, not both")
+    # exact integer ceil(n / cell_target); the oracle spells the same
+    # value greatest(k_min, ceil(count(*) / cell_target)) — double
+    # division is exact-enough there (n < 2^53, quotient error ~1e-13
+    # cannot cross the 1/cell_target gap to an int)
+    return max(k_min, -(-vectors.count() // cell_target))
+
+
+def _cent_rows(cents: DataFrame, by: str | None = None) -> DataFrame:
+    """(_cid, _cv) centroids collapsed into ONE sorted ``_cents``
+    array of structs per ``by`` group (one global row when None)."""
+    return cents.groupBy(*([by] if by else [])).agg(
         F.sort_array(F.collect_list(F.struct("_cid", "_cv"))).alias("_cents")
     )
-    best = F.array_min(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                _sq_dist(F.col(codes_col), c["_cv"]).alias("_d2"),
-                c["_cid"].alias("_cid"),
-            ),
-        )
-    )
-    return (
-        vectors.crossJoin(F.broadcast(cents_row))
-        .withColumn("_best", best)
-        .withColumn("_d2", F.col("_best._d2"))
-        .withColumn("_cid", F.col("_best._cid"))
-        .drop("_best", "_cents")
-    )
 
 
-def _kmeans_assign_grouped(
-    pts: DataFrame, cents_g: DataFrame, codes_col: str
+def _nearest(
+    points: DataFrame, cents: DataFrame, codes_col: str, by: str | None = None
 ) -> DataFrame:
-    """Fine argmin WITHIN a point's coarse group: `pts` carries
-    `_gid`; `cents_g` is (_cid, _cv, _gid). Group arrays broadcast
-    (one row per gid), so the per-point work is |group| distances —
-    K/√K on average — instead of K. Same (d2, cid) struct-min
-    tie-break as the flat assign."""
-    rows = cents_g.groupBy("_gid").agg(
-        F.sort_array(F.collect_list(F.struct("_cid", "_cv"))).alias("_cents")
-    )
+    """Nearest centroid per point by exact integer squared distance;
+    adds (_d2, _cid). ``cents`` is (_cid, _cv[, by]); with ``by`` a
+    point only sees its own group's centroids (PQ subspaces, the
+    two-level coarse groups).
+
+    A PURE SCAN-SIDE PROJECTION: the centroids collapse into one
+    broadcast row per group, and the winner is array_min over (d2,
+    cid) structs — struct ordering gives the same smallest-distance-
+    then-smallest-cid tie-break a row_number window would, with NO ×K
+    row explosion, NO per-point shuffle, and NO sort. (The previous
+    crossJoin-per-centroid + window spelling cost ~4 tiny AQE stages
+    per Lloyd iteration; at local scale the query was stage-latency-
+    bound — 22 jobs for 2000 rows. Same fix as the LSH plane rewrite,
+    see PERF.md. A statically unrolled distance tree was measured
+    SLOWER than the HOF fold — codegen compile time swamps
+    interpreted-fold overhead.)"""
+    rows = F.broadcast(_cent_rows(cents, by))
     best = F.array_min(
         F.transform(
             F.col("_cents"),
@@ -493,11 +507,31 @@ def _kmeans_assign_grouped(
         )
     )
     return (
-        pts.join(F.broadcast(rows), "_gid")
+        (points.join(rows, by) if by else points.crossJoin(rows))
         .withColumn("_best", best)
         .withColumn("_d2", F.col("_best._d2"))
         .withColumn("_cid", F.col("_best._cid"))
         .drop("_best", "_cents")
+    )
+
+
+def _centroids(df: DataFrame, keys: list[str], codes_col: str) -> DataFrame:
+    """The integer-mean update: per ``keys`` group, the per-dimension
+    floor(sum / count) of ``codes_col`` as (*keys, _cv). One
+    map-side-combinable shuffle on (keys, dim); the corpus never
+    shuffles its vectors."""
+    by_dim = df.select(*keys, F.posexplode(F.col(codes_col)).alias("_pos", "_v"))
+    # floor(sum::double / count) — identical IEEE spelling in the
+    # DuckDB oracles (integer `div` truncates toward zero in Spark but
+    # floors in DuckDB, so the double floor is the portable form; sums
+    # stay far below 2^53 exactness)
+    means = by_dim.groupBy(*keys, "_pos").agg(
+        F.floor(F.sum("_v").cast("double") / F.count(F.lit(1))).cast("int").alias("_m")
+    )
+    return means.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("_pos", "_m"))), lambda s: s["_m"]
+        ).alias("_cv")
     )
 
 
@@ -541,15 +575,8 @@ def kmeans_codes_2level(
 
     Returns (id_col, cluster_id, sq_dist)."""
     vectors = vectors.persist()
-    if cell_target is not None:
-        if k_cap is not None:
-            raise ValueError("pass either k_cap or cell_target, not both")
-        n = vectors.count()
-        k_cap = max(k_min, -(-n // cell_target))
-    seed = F.col(id_col) % k_every == 0
-    if k_cap is not None:
-        seed = seed & (F.col(id_col) < k_every * k_cap)
-    cents = vectors.filter(seed).select(
+    k_cap = _derive_k_cap(vectors, k_cap, cell_target, k_min)
+    cents = vectors.filter(_seeds(id_col, k_every, k_cap)).select(
         F.col(id_col).alias("_cid"), F.col(codes_col).alias("_cv")
     )
     # coarse pick by centroid RANK (not raw id, which may be sparse):
@@ -559,49 +586,33 @@ def kmeans_codes_2level(
     coarse = (
         cents.withColumn("_rn", F.row_number().over(wk))
         .filter((F.col("_rn") - 1) % coarse_stride == 0)
-        .select(F.col("_cid").alias("_gid"), F.col("_cv").alias("_gv"))
+        .select("_cid", "_cv")
     )
     # frozen grouping of centroid ids (argmin of the INITIAL vectors
     # over the coarse set) — inherited by every Lloyd update
-    grp = _kmeans_assign(
-        cents.select(F.col("_cid").alias("_ccid"), F.col("_cv").alias("_q")),
-        coarse.select(F.col("_gid").alias("_cid"), F.col("_gv").alias("_cv")),
-        "_ccid",
-        "_q",
+    grp = _nearest(
+        cents.select(F.col("_cid").alias("_ccid"), F.col("_cv").alias("_q")), coarse, "_q"
     ).select(F.col("_ccid").alias("_cid"), F.col("_cid").alias("_gid"))
     # per-point coarse group: computed once against the frozen coarse
     # set, persisted for reuse by every iteration's fine assign
     pts = (
-        _kmeans_assign(
-            vectors,
-            coarse.select(F.col("_gid").alias("_cid"), F.col("_gv").alias("_cv")),
-            id_col,
-            codes_col,
-        )
+        _nearest(vectors, coarse, codes_col)
         .select(id_col, codes_col, F.col("_cid").alias("_gid"))
         .persist()
     )
     cents_g = cents.join(grp, "_cid")
     for _ in range(iters):
-        assigned = _kmeans_assign_grouped(pts, cents_g, codes_col)
-        by_dim = assigned.select(
-            "_cid", F.posexplode(F.col(codes_col)).alias("_pos", "_v")
-        )
-        means = by_dim.groupBy("_cid", "_pos").agg(
-            F.floor(F.sum("_v").cast("double") / F.count(F.lit(1))).cast("int").alias("_m")
-        )
-        new_cents = means.groupBy("_cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_pos", "_m"))), lambda s: s["_m"]
-            ).alias("_cv")
-        )
         # lazy pin (r9, the _pq_train recipe): the pin must also
         # TRUNCATE the logical plan so each Lloyd iteration's analysis
         # stops re-walking all prior iterations' grouped-assign HOF
         # trees; ≤ K rows per pin, bounded build-time jobs under AQE
         # (documented tradeoff)
-        cents_g = pin(new_cents.join(grp, "_cid"), "bounded")
-    final = _kmeans_assign_grouped(pts, cents_g, codes_col)
+        cents_g = pin(
+            _centroids(_nearest(pts, cents_g, codes_col, "_gid"), ["_cid"], codes_col)
+            .join(grp, "_cid"),
+            "bounded",
+        )
+    final = _nearest(pts, cents_g, codes_col, "_gid")
     # lazy persist: the two-level chain is many small stages (coarse
     # window, grouping assigns, broadcast group arrays) — consumers
     # like semdedup's pair self-join read the result 3x, and at local
@@ -680,42 +691,20 @@ def kmeans_codes(
     # (bench.py / oracle_check clear between queries). Construction
     # stays action-free: persist() is lazy.
     vectors = vectors.persist()
-    if cell_target is not None:
-        if k_cap is not None:
-            raise ValueError("pass either k_cap or cell_target, not both")
-        # exact integer ceil(n / cell_target); the oracle spells the
-        # same value greatest(k_min, ceil(count(*) / cell_target)) —
-        # double division is exact-enough here (n < 2^53, quotient
-        # error ~1e-13 cannot cross the 1/cell_target gap to an int)
-        n = vectors.count()
-        k_cap = max(k_min, -(-n // cell_target))
-    seed = F.col(id_col) % k_every == 0
-    if k_cap is not None:
-        seed = seed & (F.col(id_col) < k_every * k_cap)
-    cents = vectors.filter(seed).select(
+    k_cap = _derive_k_cap(vectors, k_cap, cell_target, k_min)
+    cents = vectors.filter(_seeds(id_col, k_every, k_cap)).select(
         F.col(id_col).alias("_cid"), F.col(codes_col).alias("_cv")
     )
     for _ in range(iters):
-        assigned = _kmeans_assign(vectors, cents, id_col, codes_col)
-        by_dim = assigned.select(
-            "_cid", F.posexplode(F.col(codes_col)).alias("_pos", "_v")
-        )
-        # floor(sum::double / count) — identical IEEE spelling in the
-        # DuckDB oracle (integer `div` truncates toward zero in Spark
-        # but floors in DuckDB, so the double floor is the portable
-        # form; sums stay far below 2^53 exactness)
-        means = by_dim.groupBy("_cid", "_pos").agg(
-            F.floor(F.sum("_v").cast("double") / F.count(F.lit(1))).cast("int").alias("_m")
-        )
-        cents = means.groupBy("_cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_pos", "_m"))), lambda s: s["_m"]
-            ).alias("_cv")
-        ).coalesce(1).persist()
         # coalesce(1): cents is ≤ k_cap rows — the next assign's
         # collect-to-one-row aggregate otherwise pays 32 task launches
         # per Lloyd round for a handful of rows (r9 train_bpe lesson)
-    return _kmeans_assign(vectors, cents, id_col, codes_col).select(
+        cents = (
+            _centroids(_nearest(vectors, cents, codes_col), ["_cid"], codes_col)
+            .coalesce(1)
+            .persist()
+        )
+    return _nearest(vectors, cents, codes_col).select(
         id_col,
         F.col("_cid").alias("cluster_id"),
         F.col("_d2").alias("sq_dist"),
@@ -759,35 +748,6 @@ def _pq_subspaces(
     )
 
 
-def _pq_assign(subs: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
-    """Nearest codebook entry per (vector, subspace): the per-subspace
-    codebooks collapse into n_sub broadcast rows (sorted (cid, cv)
-    struct arrays), the join on sub is a broadcast hash join, and the
-    winner is a scan-side array_min over (d2, cid) structs — same
-    smallest-distance-then-smallest-cid semantics as a row_number
-    window with no ×K explosion and no per-(vector, sub) sort (see
-    _kmeans_assign)."""
-    cents_by_sub = cents.groupBy("sub").agg(
-        F.sort_array(F.collect_list(F.struct("_cid", "_cv"))).alias("_cents")
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                _sq_dist(F.col("_sc"), c["_cv"]).alias("_d2"),
-                c["_cid"].alias("_cid"),
-            ),
-        )
-    )
-    return (
-        subs.join(F.broadcast(cents_by_sub), "sub")
-        .withColumn("_best", best)
-        .withColumn("_d2", F.col("_best._d2"))
-        .withColumn("_cid", F.col("_best._cid"))
-        .drop("_best", "_cents")
-    )
-
-
 def _pq_train(
     subs: DataFrame,
     k_every: int,
@@ -808,20 +768,10 @@ def _pq_train(
     construction test. The checkpoint (unlike persist) truncates the
     logical plan, so iteration i+1's analysis no longer re-walks
     every prior iteration's HOF assign tree."""
-    seed = F.col(id_col) % k_every == 0
-    if k_cap is not None:
-        seed = seed & (F.col(id_col) < k_every * k_cap)
-    cents = subs.filter(seed).select(
+    cents = subs.filter(_seeds(id_col, k_every, k_cap)).select(
         "sub", F.col(id_col).alias("_cid"), F.col("_sc").alias("_cv")
     )
     for _ in range(iters):
-        assigned = _pq_assign(subs, cents, id_col)
-        by_dim = assigned.select(
-            "sub", "_cid", F.posexplode(F.col("_sc")).alias("_pos", "_v")
-        )
-        means = by_dim.groupBy("sub", "_cid", "_pos").agg(
-            F.floor(F.sum("_v").cast("double") / F.count(F.lit(1))).cast("int").alias("_m")
-        )
         # lazy pin, not persist: the pin must also TRUNCATE the
         # logical plan — each Lloyd iteration otherwise
         # re-analyzes the whole HOF-heavy assign tree of every prior
@@ -830,11 +780,7 @@ def _pq_train(
         # planning dominated knn_ivfpq's wall-clock. ≤ n_sub × K rows
         # per pin; blocks are GC-reclaimed with the RDD reference.
         cents = pin(
-            means.groupBy("sub", "_cid").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("_pos", "_m"))), lambda s: s["_m"]
-                ).alias("_cv")
-            ),
+            _centroids(_nearest(subs, cents, "_sc", "sub"), ["sub", "_cid"], "_sc"),
             "bounded",
         )
     return cents
@@ -856,7 +802,7 @@ def pq_codes(
     subspace slice the training loop used."""
     subs = _pq_subspaces(vectors, n_sub, id_col, codes_col).persist()
     cents = _pq_train(subs, k_every, iters, id_col, k_cap)
-    return _pq_assign(subs, cents, id_col).select(
+    return _nearest(subs, cents, "_sc", "sub").select(
         id_col, "sub", F.col("_cid").alias("code_id"), F.col("_d2").alias("sq_dist")
     )
 
@@ -897,24 +843,16 @@ def knn_pq(
     # _pq_train's output is already checkpoint-pinned; a second
     # persist layer only adds cache-write cost
     cents = _pq_train(subs, k_every, iters, id_col, k_cap)
-    corpus = _pq_assign(subs, cents, id_col)
+    corpus = _nearest(subs, cents, "_sc", "sub")
     qsubs = _pq_subspaces(
         queries.select(F.col(id_col).alias("query_id"), codes_col),
         n_sub,
         "query_id",
         codes_col,
     )
-    qd2 = F.aggregate(
-        F.zip_with(
-            F.col("_sc"), F.col("_cv"),
-            lambda a, b: ((a - b).cast("bigint") * (a - b).cast("bigint")),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
     dtable = (
         qsubs.join(F.broadcast(cents), "sub")
-        .withColumn("_qd2", qd2)
+        .withColumn("_qd2", _sq_dist(F.col("_sc"), F.col("_cv")))
         .select("query_id", "sub", F.col("_cid").alias("code_id"), "_qd2")
     )
     adist = (
@@ -1011,7 +949,7 @@ def knn_ivfpq(
 
     Plan shape: the scan-side cell assign and the probe-cell pick are
     both array_min/array_sort over ONE broadcast centroid row (no ×K
-    explosion — see _kmeans_assign); the only corpus shuffles are the
+    explosion — see _nearest); the only corpus shuffles are the
     id-keyed cells/residual join and the final (query, vec) partial
     aggregation — the residual path adds NO extra corpus shuffle (the
     cell-centroid join is against the broadcast K_coarse rows).
@@ -1020,13 +958,10 @@ def knn_ivfpq(
     # has 2+ consumers); cache lifetime is the CALLER's
     # responsibility — see knn_pq's note.
     vectors = vectors.persist()
-    cap = (F.col(id_col) % coarse_every == 0)
-    if k_cap is not None:
-        cap = cap & (F.col(id_col) < coarse_every * k_cap)
-    coarse = vectors.filter(cap).select(
+    coarse = vectors.filter(_seeds(id_col, coarse_every, k_cap)).select(
         F.col(id_col).alias("_cid"), F.col(codes_col).alias("_cv")
     )
-    assigned_cells = _kmeans_assign(vectors, coarse, id_col, codes_col).select(
+    assigned_cells = _nearest(vectors, coarse, codes_col).select(
         id_col, codes_col, F.col("_cid").alias("cell")
     )
     residual = F.zip_with(F.col(codes_col), F.col("_ccv"), lambda a, b: a - b)
@@ -1043,27 +978,20 @@ def knn_ivfpq(
             .select(id_col, "cell", residual.alias("_rc"))
         )
         subs = _pq_subspaces(rvec, n_sub, id_col, "_rc", extra_cols=["cell"]).persist()
-        corpus_src = subs
     else:
         subs = _pq_subspaces(vectors, n_sub, id_col, codes_col).persist()
-        corpus_src = None
     # _pq_train's output is already checkpoint-pinned; a second
     # persist layer only adds cache-write cost
     cents = _pq_train(subs, k_every, iters, id_col, k_cap)
+    encoded = _nearest(subs, cents, "_sc", "sub")
     if by_residual:
-        corpus = _pq_assign(corpus_src, cents, id_col).select(
-            id_col, "cell", "sub", F.col("_cid").alias("code_id")
-        )
+        corpus = encoded.select(id_col, "cell", "sub", F.col("_cid").alias("code_id"))
     else:
-        corpus = (
-            _pq_assign(subs, cents, id_col)
-            .select(id_col, "sub", F.col("_cid").alias("code_id"))
-            .join(assigned_cells.select(id_col, "cell"), id_col)
+        corpus = encoded.select(id_col, "sub", F.col("_cid").alias("code_id")).join(
+            assigned_cells.select(id_col, "cell"), id_col
         )
 
-    coarse_row = coarse.groupBy().agg(
-        F.sort_array(F.collect_list(F.struct("_cid", "_cv"))).alias("_cents")
-    )
+    coarse_row = _cent_rows(coarse)
     ranked_cells = F.slice(
         F.array_sort(
             F.transform(
@@ -1089,14 +1017,7 @@ def knn_ivfpq(
             F.col("_pc._ccv").alias("_ccv"),
         )
     )
-    qd2 = F.aggregate(
-        F.zip_with(
-            F.col("_sc"), F.col("_cv"),
-            lambda a, b: ((a - b).cast("bigint") * (a - b).cast("bigint")),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    qd2 = _sq_dist(F.col("_sc"), F.col("_cv"))
     if by_residual:
         # one distance table per (query, probed cell): the query's
         # residual to THAT cell vs the shared residual codebooks
@@ -1586,25 +1507,14 @@ def nearest_centroid_classify(
     means (ONE map-side-combined shuffle on (label, dim) — the
     kmeans update step with labels as fixed clusters), and prediction
     is the scan-side broadcast argmin of exact integer squared
-    distance (_kmeans_assign — no ×K explosion). Returns
+    distance (_nearest — no ×K explosion). Returns
     (id, label, predicted, sq_dist, correct).
 
     The natural centroid-quality probe of an embedding pipeline:
     train/apply in one plan, resubstitution accuracy as the health
     metric."""
-    by_dim = df.select(
-        F.col(label_col).alias("_cid"), F.posexplode(F.col(codes_col)).alias("_pos", "_v")
-    )
-    means = by_dim.groupBy("_cid", "_pos").agg(
-        F.floor(F.sum("_v").cast("double") / F.count(F.lit(1))).cast("int").alias("_m")
-    )
-    cents = means.groupBy("_cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_pos", "_m"))), lambda s: s["_m"]
-        ).alias("_cv")
-    )
-    assigned = _kmeans_assign(df, cents, id_col, codes_col)
-    return assigned.select(
+    cents = _centroids(df.select(F.col(label_col).alias("_cid"), codes_col), ["_cid"], codes_col)
+    return _nearest(df, cents, codes_col).select(
         id_col,
         F.col(label_col),
         F.col("_cid").alias("predicted"),
@@ -1635,27 +1545,9 @@ def centroid_outliers(
     is scan-side; the global top-N is Spark's TakeOrdered (per-
     partition heaps, no full sort). Returns (id, sq_dist, rank) for
     the top_n farthest vectors, rank 1 = farthest, ties by id."""
-    by_dim = df.select(F.posexplode(F.col(codes_col)).alias("_pos", "_v"))
-    means = by_dim.groupBy("_pos").agg(
-        F.floor(F.sum("_v").cast("double") / F.count(F.lit(1))).cast("int").alias("_m")
-    )
-    cent = means.groupBy().agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_pos", "_m"))), lambda s: s["_m"]
-        ).alias("_cv")
-    )
+    cent = _centroids(df, [], codes_col)
     scored = df.crossJoin(F.broadcast(cent)).withColumn(
-        "sq_dist",
-        F.aggregate(
-            F.zip_with(
-                F.col(codes_col),
-                F.col("_cv"),
-                lambda a, b: (a.cast("long") - b.cast("long"))
-                * (a.cast("long") - b.cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
+        "sq_dist", _sq_dist(F.col(codes_col), F.col("_cv"))
     )
     top = scored.orderBy(F.col("sq_dist").desc(), F.col(id_col)).limit(top_n)
     # rank over the already-bounded top_n rows only (single tiny task)
@@ -1717,20 +1609,7 @@ def label_separation(
     inputs). Scan-side shape: centroids collapse to ONE broadcast row
     (K·dims ints); per-vector intra/other distances are a pure
     projection; one map-side-combined shuffle on the label."""
-    by_dim = df.select(
-        F.col(label_col).alias("_cid"), F.posexplode(F.col(codes_col)).alias("_pos", "_v")
-    )
-    means = by_dim.groupBy("_cid", "_pos").agg(
-        F.floor(F.sum("_v").cast("double") / F.count(F.lit(1))).cast("int").alias("_m")
-    )
-    cents = means.groupBy("_cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_pos", "_m"))), lambda s: s["_m"]
-        ).alias("_cv")
-    )
-    cents_row = cents.groupBy().agg(
-        F.sort_array(F.collect_list(F.struct("_cid", "_cv"))).alias("_cents")
-    )
+    cents = _centroids(df.select(F.col(label_col).alias("_cid"), codes_col), ["_cid"], codes_col)
     dists = F.transform(
         F.col("_cents"),
         lambda c: F.struct(
@@ -1738,7 +1617,7 @@ def label_separation(
         ),
     )
     with_d = (
-        df.crossJoin(F.broadcast(cents_row))
+        df.crossJoin(F.broadcast(_cent_rows(cents)))
         .withColumn("_ds", dists)
         .withColumn(
             "_intra",
@@ -1825,18 +1704,13 @@ def pq_index_add(
 
     base_c = quant(e_b)
     new_c = quant(e_n)
-    seed = F.col(id_col) % coarse_every == 0
-    if k_cap is not None:
-        seed = seed & (F.col(id_col) < coarse_every * k_cap)
-    cc = base_c.filter(seed).select(
+    cc = base_c.filter(_seeds(id_col, coarse_every, k_cap)).select(
         F.col(id_col).alias("_cid"), F.col("q_codes").alias("_cv")
     )
-    new_cells = _kmeans_assign(new_c, cc, id_col, "q_codes").select(
-        id_col, F.col("_cid").alias("cell")
-    )
+    new_cells = _nearest(new_c, cc, "q_codes").select(id_col, F.col("_cid").alias("cell"))
     subs_base = _pq_subspaces(base_c, n_sub, id_col, "q_codes").persist()
     cents = _pq_train(subs_base, k_every, iters, id_col, k_cap)
-    enc = _pq_assign(_pq_subspaces(new_c, n_sub, id_col, "q_codes"), cents, id_col)
+    enc = _nearest(_pq_subspaces(new_c, n_sub, id_col, "q_codes"), cents, "_sc", "sub")
     return enc.join(new_cells, id_col).select(
         id_col,
         "cell",

@@ -323,7 +323,7 @@ def pagerank_weighted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fwd = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"), "w")
     rev = pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"), "w")
-    return G.pagerank_weighted(fwd.unionAll(rev).distinct(), iters=2)
+    return G.pagerank(fwd.unionAll(rev).distinct(), iters=2, weight_col="w")
 
 
 def _prw_iter(prev: str, cur: str) -> str:

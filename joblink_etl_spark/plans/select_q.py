@@ -448,33 +448,23 @@ FROM best b JOIN documents d ON d.doc_id = b.doc_id
 
 
 def ivf_mmr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import _kmeans_assign, mmr_rerank_pairs
+    from ..operators.similarity import _cent_rows, _nearest, _seeds, _sq_dist, mmr_rerank_pairs
 
     codes = SIM.quantize_embeddings_global(
         parallelize(table(spark, sf_dir, "embeddings"))
     ).select("vec_id", "q_codes")
     queries = codes.filter(F.col("vec_id") < 3)
     corpus = codes.filter(F.col("vec_id") >= 3)
-    cc = corpus.filter(
-        (F.col("vec_id") % 25 == 0) & (F.col("vec_id") < 2500)
-    ).select(F.col("vec_id").alias("_cid"), F.col("q_codes").alias("_cv"))
-    assigned = _kmeans_assign(corpus, cc, "vec_id", "q_codes").select(
+    cc = corpus.filter(_seeds("vec_id", 25, 100)).select(
+        F.col("vec_id").alias("_cid"), F.col("q_codes").alias("_cv")
+    )
+    assigned = _nearest(corpus, cc, "q_codes").select(
         F.col("vec_id").alias("did"),
         F.col("_cid").alias("cell"),
         F.col("q_codes").alias("d_codes"),
     )
-    cents_row = cc.groupBy().agg(
-        F.sort_array(F.collect_list(F.struct("_cid", "_cv"))).alias("_cents")
-    )
-    d2 = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(
-            F.col("q_codes"), c["_cv"], lambda x, y: (x.cast("long") - y) * (x - y)
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     probes = (
-        queries.crossJoin(F.broadcast(cents_row))
+        queries.crossJoin(F.broadcast(_cent_rows(cc)))
         .select(
             F.col("vec_id").alias("qid"),
             F.col("q_codes"),
@@ -484,7 +474,8 @@ def ivf_mmr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.transform(
                             F.col("_cents"),
                             lambda c: F.struct(
-                                d2(c).alias("_d2"), c["_cid"].alias("_cid")
+                                _sq_dist(F.col("q_codes"), c["_cv"]).alias("_d2"),
+                                c["_cid"].alias("_cid"),
                             ),
                         )
                     ),

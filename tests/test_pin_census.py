@@ -24,10 +24,10 @@ PIN_CENSUS: dict[tuple[str, str], dict[str, int]] = {
     ("plans/graph_q.py", "ppr_docs"): {"candidate": 1},
     ("operators/dedup.py", "connected_components"): {"candidate": 4},
     ("operators/dedup.py", "connected_components_star"): {"candidate": 3},
-    ("operators/graph.py", "pagerank"): {"candidate": 3},
-    ("operators/graph.py", "pagerank_personalized"): {"candidate": 5},
-    ("operators/graph.py", "pagerank_weighted"): {"candidate": 3},
-    ("operators/graph.py", "label_propagation"): {"candidate": 4},
+    ("operators/graph.py", "_nodes"): {"candidate": 2},
+    ("operators/graph.py", "_rank_inputs"): {"candidate": 1},
+    ("operators/graph.py", "pagerank_personalized"): {"candidate": 2},
+    ("operators/graph.py", "label_propagation"): {"candidate": 2},
     ("operators/graph.py", "ancestor_rollup"): {"candidate": 2},
     ("operators/fetch.py", "fetch_smart"): {"bounded": 1},
     ("operators/pipeline.py", "parse_batch"): {"bounded": 2},

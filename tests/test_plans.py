@@ -350,13 +350,21 @@ def test_assign_paths_have_no_ranking_windows(spark):
     windowed spelling (×K row explosion + per-vector sort) would
     reintroduce Window operators into these plans."""
     from joblink_etl_spark.plans import ext_q as E
+    from joblink_etl_spark.plans import maint_q as MQ
+    from joblink_etl_spark.plans import select_q as SQ
 
     for name, builder in (
         ("kmeans_clusters", E.kmeans_clusters_q),
         ("pq_codes", E.pq_codes_q),
         ("cosine_near_dups_lsh", E.cosine_near_dups_lsh),
+        # the global (label centroids), coarse-cell and grouped
+        # (two-level) nearest-centroid paths
+        ("rocchio_classify", SQ.rocchio_classify_q),
+        ("ann_index_add", MQ.ann_index_add_q),
+        ("semdedup_ivf", SQ.semdedup_ivf_q),
     ):
         plan = plan_of(builder(spark, SF_SMALL))
+        spark.catalog.clearCache()
         assert "Window" not in plan, f"{name} regressed to a windowed assign"
 
 

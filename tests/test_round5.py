@@ -565,14 +565,42 @@ def test_weighted_pagerank_heavier_edge_pulls_more(spark):
         [(0, 1, 9000), (0, 2, 1000), (1, 0, 9000), (2, 0, 1000)],
         "src BIGINT, dst BIGINT, w BIGINT",
     )
-    pr = {r["node"]: r["rank_scaled"] for r in G.pagerank_weighted(edges, iters=2).collect()}
+    pr = {
+        r["node"]: r["rank_scaled"]
+        for r in G.pagerank(edges, iters=2, weight_col="w").collect()
+    }
     assert pr[1] > pr[2]
     eq = spark.createDataFrame(
         [(0, 1, 5000), (0, 2, 5000), (1, 0, 5000), (2, 0, 5000)],
         "src BIGINT, dst BIGINT, w BIGINT",
     )
-    pre = {r["node"]: r["rank_scaled"] for r in G.pagerank_weighted(eq, iters=2).collect()}
+    pre = {
+        r["node"]: r["rank_scaled"]
+        for r in G.pagerank(eq, iters=2, weight_col="w").collect()
+    }
     assert pre[1] == pre[2]
+
+
+def test_pagerank_unit_weights_match_uniform_and_partitioning(spark):
+    """weight_col=None is unit weights: on a graph whose out-degrees
+    differ (1, 2 and 3), (r·1) div Σ1 must equal the uniform r div
+    outdeg row for row. Weighted ranks are a pure function of the
+    edge set, whatever its partitioning."""
+    edges = spark.createDataFrame(
+        [(0, 1, 7), (0, 2, 1), (0, 3, 2), (1, 0, 3), (1, 3, 5), (2, 0, 1), (3, 1, 4)],
+        "src BIGINT, dst BIGINT, w BIGINT",
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    uniform = rows(G.pagerank(edges.select("src", "dst"), iters=3))
+    ones = edges.withColumn("w", F.lit(1).cast("bigint"))
+    assert rows(G.pagerank(ones, iters=3, weight_col="w")) == uniform
+    weighted = rows(G.pagerank(edges, iters=3, weight_col="w"))
+    assert weighted != uniform
+    for n in (1, 7):
+        assert rows(G.pagerank(edges.repartition(n), iters=3, weight_col="w")) == weighted
 
 
 def test_check_constraints_finds_planted_violations(spark):
@@ -741,3 +769,35 @@ def test_semdedup_ivf_two_level_contract(spark):
     assert {k: tuple(v) for k, v in out.items()} == {
         k: tuple(v) for k, v in again.items()
     }
+
+
+def test_lloyd_two_level_and_pq_are_partitioning_invariant(spark):
+    """kmeans_codes_2level (grouped nearest-centroid path) and pq_codes
+    (per-subspace path) return identical rows over 1 and 7 input
+    partitions; the shared k_cap/cell_target conflict check also
+    guards the two-level builder."""
+    import random
+
+    from joblink_etl_spark.operators.similarity import (
+        kmeans_codes_2level,
+        pq_codes,
+        quantize_embeddings_global,
+    )
+
+    random.seed(5)
+    rows = [(i, [random.uniform(-1, 1) for _ in range(8)]) for i in range(150)]
+    emb = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    codes = quantize_embeddings_global(emb).select("vec_id", "q_codes")
+
+    def run(build):
+        got = {n: sorted(tuple(r) for r in build(codes.repartition(n)).collect()) for n in (1, 7)}
+        spark.catalog.clearCache()
+        return got
+
+    two = run(lambda c: kmeans_codes_2level(c, k_every=10, iters=2, coarse_stride=3))
+    assert len(two[1]) == 150 and two[1] == two[7]
+    pq = run(lambda c: pq_codes(c, n_sub=4, k_every=10, iters=2))
+    assert len(pq[1]) == 150 * 4 and pq[1] == pq[7]
+    with pytest.raises(ValueError):
+        kmeans_codes_2level(codes, k_cap=5, cell_target=10)
+    spark.catalog.clearCache()

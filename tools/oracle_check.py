@@ -99,99 +99,106 @@ def _spark_class(t) -> str:
     return t.simpleString()
 
 
-def main() -> int:
+TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
+
+
+def duckdb_views(sf_dir: str):
+    """A DuckDB connection with one view per parquet table of ``sf_dir``."""
     import duckdb
 
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(spark, con, name: str, sf_dir: str) -> tuple[int, list[str]]:
+    """Run query ``name`` on Spark and its oracle on DuckDB (``con``
+    from ``duckdb_views(sf_dir)``). Returns (Spark row count, failure
+    messages); no messages means row count, column names, column type
+    classes and order-insensitive values all agree. A query without
+    an oracle is a rows-only check."""
+    import __spark_entry__ as entrymod
+
+    oracle = entrymod.oracle_sql().get(name)
+    try:
+        # builders that lazily persist shared subtrees (PQ codebooks,
+        # bloom gram sets) leave their cache lifetime to the caller —
+        # drop it between queries like bench.py
+        spark.catalog.clearCache()
+        sdf = entrymod.queries()[name](spark, sf_dir)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+    except Exception as e:  # noqa: BLE001
+        return 0, [f"spark error: {e}"]
+    if oracle is None:
+        return len(srows), []
+    try:
+        # Arrow-level fetch: preserves DuckDB's true output dtypes
+        # (HUGEINT → decimal128) instead of fetchall()'s Python
+        # coercion, so the comparison stays dtype-sensitive
+        tbl = con.execute(oracle).fetch_arrow_table()
+    except Exception as e:  # noqa: BLE001
+        return len(srows), [f"duckdb error: {e}"]
+    dcols = tbl.column_names
+    dtypes = {f.name: _arrow_class(f.type) for f in tbl.schema}
+    drows = [tuple(d[c] for c in dcols) for d in tbl.to_pylist()]
+
+    fails = []
+    if len(srows) != len(drows):
+        fails.append(f"row count spark={len(srows)} duckdb={len(drows)}")
+    if sorted(scols) != sorted(dcols):
+        fails.append(f"columns spark={sorted(scols)} duckdb={sorted(dcols)}")
+    if fails:
+        return len(srows), fails
+    stypes = {f.name: _spark_class(f.dataType) for f in sdf.schema.fields}
+    fails = [
+        f"dtype mismatch on '{c}': spark={stypes[c]} duckdb={dtypes.get(c)}"
+        for c in scols
+        if stypes[c] != dtypes.get(c)
+    ]
+    if fails:
+        return len(srows), fails
+    ns, nd = normalize(srows, scols), normalize(drows, dcols)
+    if ns != nd:
+        diff = [i for i, (a, b) in enumerate(zip(ns, nd)) if a != b][:3]
+        fails.append(
+            f"value mismatch at sorted rows {diff}"
+            + "".join(f"\n   spark : {ns[i]}\n   duckdb: {nd[i]}" for i in diff)
+        )
+    return len(srows), fails
+
+
+def main() -> int:
     import __spark_entry__ as entrymod
     from joblink_etl_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-
-    qs = entrymod.queries()
+    names = [n for n in entrymod.queries() if not only or n in only]
     oracles = entrymod.oracle_sql()
 
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-
+    con = duckdb_views(sf_dir)
     failures = []
-    n_run = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        n_run += 1
+    for name in names:
         t0 = time.time()
-        try:
-            # builders that lazily persist shared subtrees (PQ
-            # codebooks, bloom gram sets) leave their cache lifetime
-            # to the caller — drop it between queries like bench.py
-            spark.catalog.clearCache()
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:  # noqa: BLE001
+        n, fails = compare(spark, con, name, sf_dir)
+        if fails:
             failures.append(name)
-            print(f"FAIL {name}: spark error: {e}")
-            continue
-        if name not in oracles:
-            print(f"OK?  {name}: rows-only check, {len(srows)} rows "
-                  f"({time.time()-t0:.1f}s)")
-            if not srows:
-                print(f"     WARNING: {name} returned 0 rows")
-            continue
-        try:
-            # Arrow-level fetch: preserves DuckDB's true output dtypes
-            # (HUGEINT → decimal128) instead of fetchall()'s Python
-            # coercion, mirroring the driver's dtype-sensitive hash
-            tbl = con.execute(oracles[name]).fetch_arrow_table()
-            dcols = tbl.column_names
-            dtypes = {f.name: _arrow_class(f.type) for f in tbl.schema}
-            drows = [
-                tuple(d[c] for c in dcols) for d in tbl.to_pylist()
-            ]
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: duckdb error: {e}")
-            continue
-
-        ok = True
-        if len(srows) != len(drows):
-            ok = False
-            print(f"FAIL {name}: row count spark={len(srows)} duckdb={len(drows)}")
-        if sorted(scols) != sorted(dcols):
-            ok = False
-            print(f"FAIL {name}: columns spark={sorted(scols)} duckdb={sorted(dcols)}")
-        if ok:
-            stypes = {f.name: _spark_class(f.dataType) for f in sdf.schema.fields}
-            for c in scols:
-                if stypes[c] != dtypes.get(c):
-                    ok = False
-                    print(
-                        f"FAIL {name}: dtype mismatch on '{c}': "
-                        f"spark={stypes[c]} duckdb={dtypes.get(c)}"
-                    )
-        if ok:
-            ns, nd = normalize(srows, scols), normalize(drows, dcols)
-            if ns != nd:
-                ok = False
-                diff = [i for i, (a, b) in enumerate(zip(ns, nd)) if a != b][:3]
-                print(f"FAIL {name}: value mismatch at sorted rows {diff}")
-                for i in diff:
-                    print(f"   spark : {ns[i]}")
-                    print(f"   duckdb: {nd[i]}")
-        if ok:
-            print(f"PASS {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
+            for f in fails:
+                print(f"FAIL {name}: {f}")
+        elif name in oracles:
+            print(f"PASS {name}: {n} rows ({time.time()-t0:.1f}s)")
         else:
-            failures.append(name)
+            print(f"OK?  {name}: rows-only check, {n} rows ({time.time()-t0:.1f}s)")
+            if not n:
+                print(f"     WARNING: {name} returned 0 rows")
 
-    print(f"\n{n_run - len(failures)}/{n_run} queries pass")
+    print(f"\n{len(names) - len(failures)}/{len(names)} queries pass")
     return 1 if failures else 0
 
 
