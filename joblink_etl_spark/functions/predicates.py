@@ -3,9 +3,18 @@
 Host-class regexes reproduced verbatim from
 apps-scripts/code-LLM-intergration.js:281-294; generic-title stoplist
 from :301-313.
+
+Each pattern is one constant read by two spellings: the Column
+predicate (Java regex, JVM-side) and a ``*_py`` twin on Python
+strings, which the fetch cascade's gates run inside its UDF.
+``java_regex`` compiles a constant for Python with Java's default
+semantics (ASCII ``\\s``/``\\d``, ASCII-only ``(?i)``); ``rlike`` is
+a search, so the twins call ``.search``, never ``.match``.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -36,6 +45,21 @@ GENERIC_TITLE_PHRASES = [
 GENERIC_TITLE_RE = "(" + "|".join(GENERIC_TITLE_PHRASES) + ")"
 
 
+def java_regex(pattern: str) -> re.Pattern:
+    """A Java-regex pattern constant compiled for Python strings."""
+    return re.compile(pattern, re.ASCII)
+
+
+def java_trim(s: str) -> str:
+    """Spark ``trim``: strips ASCII spaces only (tabs and newlines stay)."""
+    return s.strip(" ")
+
+
+_ATS_HOST = java_regex(ATS_HOST_RE)
+_AGGREGATOR_HOST = java_regex(AGGREGATOR_HOST_RE)
+_GENERIC_TITLE = java_regex(GENERIC_TITLE_RE)
+
+
 def is_valid_url(u: Column) -> Column:
     """reference P1 (code-LLM-intergration.js:182)."""
     return u.rlike("^https?://")
@@ -45,8 +69,16 @@ def is_ats_host(host: Column) -> Column:
     return host.rlike(ATS_HOST_RE)
 
 
+def is_ats_host_py(host: str) -> bool:
+    return _ATS_HOST.search(host) is not None
+
+
 def is_aggregator_host(host: Column) -> Column:
     return host.rlike(AGGREGATOR_HOST_RE)
+
+
+def is_aggregator_host_py(host: str) -> bool:
+    return _AGGREGATOR_HOST.search(host) is not None
 
 
 def is_generic_title(s: Column) -> Column:
@@ -54,3 +86,8 @@ def is_generic_title(s: Column) -> Column:
     isGenericTitle_, code-LLM-intergration.js:301-313)."""
     t = F.lower(F.trim(F.coalesce(s, F.lit(""))))
     return (F.length(t) <= 2) | t.rlike(GENERIC_TITLE_RE)
+
+
+def is_generic_title_py(s: str | None) -> bool:
+    t = java_trim(s or "").lower()
+    return len(t) <= 2 or _GENERIC_TITLE.search(t) is not None

@@ -7,8 +7,12 @@ apps-scripts/code-LLM-intergration.js (cited per function).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .predicates import java_regex
 
 # The 14 tracking params stripped by canonicalization
 # (reference code-LLM-intergration.js:615). Deletion is
@@ -20,6 +24,10 @@ TRACKING_PARAMS = [
 ]
 
 
+WWW_PREFIX_RE = r"^www\."
+_WWW_PREFIX = java_regex(WWW_PREFIX_RE)
+
+
 def host_from_url(u: Column) -> Column:
     """Hostname, lowercased, leading 'www.' stripped; '' when the URL
     doesn't parse (reference hostFromUrl_, code-LLM-intergration.js:124-127).
@@ -27,7 +35,65 @@ def host_from_url(u: Column) -> Column:
     # try_parse_url: Spark 4 runs ANSI mode, where parse_url raises on
     # malformed input; the reference returns '' there (JS catch).
     host = F.lower(F.try_parse_url(u, F.lit("HOST")))
-    return F.coalesce(F.regexp_replace(host, r"^www\.", ""), F.lit(""))
+    return F.coalesce(F.regexp_replace(host, WWW_PREFIX_RE, ""), F.lit(""))
+
+
+# java.net.URI (RFC 2396), which parse_url parses with, as far as its
+# getHost() reaches. "Other" characters are the non-ASCII ones that are
+# neither ISO controls nor Unicode space separators; a '%' anywhere
+# must start a %hh escape.
+_OTHER = "\u00a1-\u167f\u1681-\u1fff\u200b-\u2027\u202a-\u202e\u2030-\u205e\u2060-\u2fff\u3001-\U0010ffff"
+_UNRESERVED = "A-Za-z0-9\\-_.!~*'()%" + _OTHER
+_URI = re.compile(r"(?:([^/?#:]*):)?//([^/?#]*)([^?#]*)(?:\?([^#]*))?(?:#(.*))?", re.S)
+_BAD_ESCAPE = re.compile(r"%(?![0-9A-Fa-f]{2})")
+_SCHEME = re.compile(r"[A-Za-z][A-Za-z0-9+.\-]*")
+_PATH = re.compile(f"[{_UNRESERVED}:@&=+$,;/]*")
+_URIC = re.compile(f"[{_UNRESERVED};/?:@&=+$,\\[\\]]*")
+_USERINFO = re.compile(f"[{_UNRESERVED};:&=+$,]*")
+_LABEL = "[A-Za-z0-9](?:[A-Za-z0-9-]*[A-Za-z0-9])?"
+_IPV4 = re.compile(r"([0-9]+)\.([0-9]+)\.([0-9]+)\.([0-9]+)(?=$|:)")
+_HOSTNAME = re.compile(f"(?:{_LABEL}\\.)*({_LABEL})\\.?(?=$|:)")
+_IPV6 = re.compile(r"\[[0-9A-Fa-f:.]+(?:%[^\]]+)?\]")
+_PORT = re.compile(r"(?::([0-9]*))?$")
+
+
+def _java_uri_host(u: str) -> str | None:
+    """``new java.net.URI(u).getHost()``: None where the URI has no
+    server-based authority or does not parse. IPv6 literals are checked
+    for their characters only."""
+    m = _URI.fullmatch(u)
+    if not m or _BAD_ESCAPE.search(u):
+        return None
+    scheme, auth, path, query, frag = m.groups(default="")
+    if m.group(1) is not None and not _SCHEME.fullmatch(scheme):
+        return None
+    if not (_PATH.fullmatch(path) and _URIC.fullmatch(query) and _URIC.fullmatch(frag)):
+        return None
+    # authority: [userinfo@]host[:port], userinfo up to the first '@'
+    user, at, hostport = auth.partition("@")
+    if not at:
+        hostport = auth
+    elif not _USERINFO.fullmatch(user):
+        return None
+    if hostport.startswith("["):
+        h = _IPV6.match(hostport)
+    else:
+        h = _IPV4.match(hostport)
+        if not (h and all(int(b) <= 255 for b in h.groups())):
+            h = _HOSTNAME.match(hostport)
+            # a dotted name's last label must start with a letter
+            if h and h.start(1) > 0 and not h.group(1)[0].isalpha():
+                return None
+    port = h and _PORT.match(hostport, h.end())
+    if not port or int(port.group(1) or 0) > 2**31 - 1:
+        return None
+    return hostport[: h.end()]
+
+
+def host_from_url_py(u: str) -> str:
+    """Python twin of host_from_url on one string."""
+    host = _java_uri_host(u)
+    return _WWW_PREFIX.sub("", host.lower()) if host else ""
 
 
 def make_canonical(u: Column) -> Column:

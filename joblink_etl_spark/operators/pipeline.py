@@ -6,7 +6,16 @@ re-expression of the reference's paste-a-link lifecycle:
   write-back MERGE (+ fetch/parse/extract provenance tokens) →
   notes enqueue → notes (LLM w/ template fallback) → dequeue
 
-Each stage is DataFrame → DataFrame; one logical plan per batch.
+Each stage is DataFrame → DataFrame. The side-effecting stages each
+cross into Python once per batch, in one pandas UDF: the fetch cascade
+(``fetch_smart``, every tier inside one UDF over the URL column), the
+renderer escalation and the LLM calls (a UDF each, gated so rows that
+don't need the call make none). Only the UDF's input columns cross;
+the batch's other columns stay in the JVM. An eager bounded ``pin()``
+after the fetch, the decide and the escalation runs each of these once
+per row and keeps every later plan free of the earlier stages; the
+drain loop pins the tracker and queues once per cycle.
+
 The reference's api_company/api_role fetch outputs are carried but
 (faithfully) never consumed — both reference variants compute and
 then ignore them (verified: no reads of apiCompany/apiRole after

@@ -16,15 +16,12 @@ from joblink_etl_spark.clients import (
     ThrowingHttpClient,
 )
 from joblink_etl_spark.operators.enqueue import enqueue
-from joblink_etl_spark.operators.fetch import (
-    fetch_smart,
-    make_api_udf,
-    make_http_udf,
-    make_render_udf,
-)
+from joblink_etl_spark.operators import fetch as fetch_mod
+from joblink_etl_spark.operators.fetch import cascade_row, fetch_smart, make_render_udf
 from joblink_etl_spark.operators.llm_rescue import make_extract_udf
 from joblink_etl_spark.operators.pipeline import drain_all, notes_batch, parse_batch
 from perfbench.clients import counting_clients
+from perfbench.expect import classify
 
 HTTP = SyntheticSiteHttpClient()
 RENDERER = FakeRendererClient()
@@ -143,22 +140,112 @@ def test_fetch_exact_client_calls(spark):
         assert (calls.get(("http", cls), 0), calls.get(("render", cls), 0)) == (n_http, n_render), cls
     assert {cls for _, cls in calls} <= set(FETCH_CALLS)
 
-    # a false gate skips the client and returns the empty result, the
-    # LLM extract's gate included
+    # a false gate skips the client and returns the empty result: the
+    # renderer escalation's and the LLM extract's gated UDFs
     acc.value = {}
     gated = df.select(
-        make_api_udf(http)(F.col("url"), F.lit(False)).alias("api"),
-        make_http_udf(http)(F.col("url"), F.lit(False)).alias("direct"),
         make_render_udf(renderer)(F.col("url"), F.lit(False)).alias("rendered"),
         make_extract_udf(llm)(*[F.col("url")] * 6, F.lit(False)).alias("extracted"),
     ).collect()
     assert len(gated) == len(urls)
     assert acc.value == {}
     for r in gated:
-        assert (r["api"]["ok"], r["api"]["err"]) == (0, None)
-        assert r["direct"]["final_url"] is None and r["direct"]["err"] is None
         assert r["rendered"]["final_url"] is None
         assert tuple(r["extracted"]) == ("", "", None)
+
+
+class _CountingHttp:
+    """Spark-free call counter over a fake HTTP client; ``raise_on``
+    URL substrings make the call throw."""
+
+    def __init__(self, calls, inner=None, raise_on=()):
+        self.calls, self.inner, self.raise_on = calls, inner or SyntheticSiteHttpClient(), raise_on
+
+    def fetch(self, url):
+        self.calls.append(("http", classify(url)))
+        if any(s in url for s in self.raise_on):
+            raise RuntimeError("unwrapped call refused")
+        return self.inner.fetch(url)
+
+
+class _CountingRenderer:
+    def __init__(self, calls):
+        self.calls, self.inner = calls, FakeRendererClient()
+
+    def render(self, url):
+        self.calls.append(("render", classify(url)))
+        return self.inner.render(url)
+
+
+DIRECT_303 = '<html><h1>Staff Analyst 303</h1><meta property="og:site_name" content="Site 303"></html>'
+RENDERED_404 = '<html><h1>Rendered Analyst 404</h1><meta property="og:site_name" content="Thin Co 404"></html>'
+
+# the row each URL class's link comes out as, and the link
+CASCADE_ROWS = {
+    "greenhouse": (URLS["gh"], (200, URLS["gh"], "", "gh-api", "Acme Corp", "Platform Engineer 101", "")),
+    "lever": (URLS["lever"], (200, URLS["lever"], "", "lever-api", "Mega", "Data Engineer 202", "")),
+    "direct": (URLS["direct"], (200, URLS["direct"], DIRECT_303, "direct", "", "", "")),
+    "thin": (URLS["thin"], (200, URLS["thin"], RENDERED_404, "renderer", "", "", "")),
+    "aggregator": (
+        URLS["agg"],
+        (200, "https://boards.greenhouse.io/wrapped-co/jobs/505", "", "gh-api", "Wrapped Co",
+         "Platform Engineer 505", ""),
+    ),
+    "broken": (URLS["broken"], (500, URLS["broken"], "Internal Server Error", "direct", "", "", "")),
+    "raise": (
+        "https://site1.example.com/raise/9",
+        (0, "https://site1.example.com/raise/9", "", "direct", "", "", "connection refused"),
+    ),
+}
+
+
+def test_cascade_row_outcomes_and_calls():
+    """Spark-free: each URL class's result row, and exactly the client
+    calls of FETCH_CALLS, each client at most once per row."""
+    for cls, (url, want) in CASCADE_ROWS.items():
+        calls = []
+        http = _CountingHttp(calls, ThrowingHttpClient())
+        assert cascade_row(http, _CountingRenderer(calls), url) == want, cls
+        n_http, n_render = FETCH_CALLS[cls]
+        assert sorted(calls) == [("http", cls)] * n_http + [("render", cls)] * n_render, cls
+
+
+def test_cascade_row_api_url_drops_tracking_params():
+    """The API tier rebuilds the final URL from slug and id."""
+    row = cascade_row(HTTP, RENDERER, URLS["gh"] + "?gh_src=x&utm_source=y")
+    assert row[:4] == (200, URLS["gh"], "", "gh-api")
+
+
+def test_cascade_row_unwrapped_errors_fall_through():
+    """A client throwing on the unwrapped ATS link (API, then direct)
+    falls through to the unwrapped renderer; the row is not
+    dead-lettered, and no call repeats."""
+    calls = []
+    http = _CountingHttp(calls, raise_on=("wrapped-co",))
+    got = cascade_row(http, _CountingRenderer(calls), URLS["agg"])
+    unwrapped = "https://boards.greenhouse.io/wrapped-co/jobs/505"
+    assert got == (
+        200, unwrapped, "<html><h1>Fallback Page 505</h1></html>", "renderer-unwrapped", "", "", "",
+    )
+    assert sorted(calls) == [("http", "aggregator")] * 3 + [("render", "aggregator")] * 2
+
+
+def test_fetch_plan_has_one_python_crossing(spark, monkeypatch):
+    """The executed fetch plan holds one ArrowEvalPython node: every
+    tier runs inside the one cascade UDF."""
+    pinned = []
+
+    def spy(df, *args, **kwargs):
+        pinned.append(df)
+        return real_pin(df, *args, **kwargs)
+
+    real_pin = fetch_mod.pin
+    monkeypatch.setattr(fetch_mod, "pin", spy)
+    df = spark.createDataFrame([(u,) for u in URLS.values()], "url string")
+    assert fetch_smart(df, HTTP, RENDERER).count() == len(URLS)
+    (out,) = pinned
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def _tracker(spark, rows):

@@ -128,6 +128,25 @@ def test_ab_probe_args():
             parse_args(bad)
 
 
+def test_fetch_probe_runs_every_url_class(spark):
+    """tools/fetch_probe.py on a handful of links: every fake URL class
+    goes through the fetch and the drain, the /raise/ link dead-letters."""
+    from fetch_probe import parse_args, probe_drain, probe_fetch
+
+    from joblink_etl_spark.clients import FakeLlmClient, FakeRendererClient, ThrowingHttpClient
+
+    opts = parse_args(["--fetch-links", "14", "--warm", "1", "--drain-links", "7", "--batch-size", "7"])
+    clients = (ThrowingHttpClient(), FakeRendererClient(), FakeLlmClient())
+    fetch = probe_fetch(spark, opts, clients)
+    assert (fetch["links"], len(fetch["warm_s"])) == (14, 1)
+    drain = probe_drain(spark, opts, clients)
+    assert (drain["cycles"], drain["batches"]) == (1, {"parse": 1, "notes": 1})
+    assert drain["tracker_status"] == {"ok": 6, "error": 1}
+    assert drain["python_workers_after"] >= 1
+    with pytest.raises(SystemExit):
+        parse_args(["--fetch-link", "3"])
+
+
 def test_staleness_audit_is_green_and_bounded():
     """The rotation policy's auditability contract (r11 verdict item
     2): tools/staleness_check.py derives every query's latest
