@@ -18,7 +18,9 @@ Mapping:
 State design for scale: dedup state is keyed by (sheet_name,
 row_index) and watermark-bounded when an event-time column exists;
 windowed aggs use update/append with watermarks so state is evicted,
-not grown forever.
+not grown forever. Every custom stateful fold runs through
+streaming/state.keyed_fold, which hands the fold all of one key's
+rows in the micro-batch as one frame.
 """
 
 from __future__ import annotations
@@ -40,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.predicates import is_valid_url
+from .state import keyed_fold
 
 LINK_EVENT_SCHEMA = StructType(
     [
@@ -138,6 +141,18 @@ def run_available_now(df: DataFrame, sink_dir: str, checkpoint_dir: str, output_
     q.awaitTermination()
 
 
+def _drain_batches(stream: DataFrame, checkpoint_dir: str, handle) -> None:
+    """ST2 over foreachBatch: run `handle(batch_df, batch_id)` on every
+    pending micro-batch, then stop."""
+    (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def drain_with_dead_letter(
     stream: DataFrame,
     checkpoint_dir: str,
@@ -159,13 +174,7 @@ def drain_with_dead_letter(
         except Exception as e:  # noqa: BLE001 — dead-letter anything
             on_error(batch_df, e)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_batches(stream, checkpoint_dir, handle)
     return seen
 
 
@@ -197,7 +206,7 @@ def throttled_links(
     per_key_limit: int = 60,
     window_seconds: int = 60,
 ) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: admit at
+    """Custom stateful operator via keyed_fold: admit at
     most per_key_limit link events per sheet per wall-window, with
     the (window_start, admitted_count) pair carried ACROSS
     micro-batches — the reference's 60-requests-per-minute throttle
@@ -210,7 +219,6 @@ def throttled_links(
     shuffles once on the key like any keyed stateful op.
     """
     import pandas as pd  # noqa: PLC0415 — executor-side import
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     out_schema = StructType(
         list(LINK_EVENT_SCHEMA.fields) + [StructField("admitted", BooleanType())]
@@ -219,23 +227,17 @@ def throttled_links(
         [StructField("win_start", LongType()), StructField("n_admitted", LongType())]
     )
 
-    def throttle(key, pdf_iter, state: GroupState):
-        win_start, n_admitted = state.get if state.exists else (0, 0)
-        pdf = pd.concat(list(pdf_iter)).sort_values(["edited_at", "row_index"]).copy()
+    def throttle(key, pdf, state):
+        win_start, n_admitted = state
+        pdf = pdf.sort_values(["edited_at", "row_index"]).copy()
         epochs = [int(pd.Timestamp(ts).timestamp()) for ts in pdf["edited_at"]]
         flags, win_start, n_admitted = _throttle_flags(
             epochs, per_key_limit, window_seconds, win_start, n_admitted
         )
         pdf["admitted"] = flags
-        state.update((win_start, n_admitted))
-        yield pdf
+        return (win_start, n_admitted), pdf
 
-    return (
-        links.groupBy("sheet_name")
-        .applyInPandasWithState(
-            throttle, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
-    )
+    return keyed_fold(links, ["sheet_name"], out_schema, state_schema, (0, 0), throttle)
 
 
 def throttled_links_batch(
@@ -374,13 +376,13 @@ def streaming_band_registry(
     x100 drain measured at 454 MB growing LINEARLY with the corpus
     (BENCH_STREAMING_X100_r13.json). `ttl_seconds` is the production
     bound for that growth (r13 What's-wrong #3 → r14): when set, the
-    operator runs under GroupStateTimeout.ProcessingTimeTimeout and
+    operator runs under a processing-time timeout and
     every bucket's state row is EVICTED ttl_seconds after its last
     update — the registry then holds only buckets touched inside the
     dedup horizon, so state is O(distinct buckets per horizon), not
     O(corpus). Semantics under TTL: a clone arriving after its
     bucket expired re-registers as a fresh canonical (exactly the
-    stored-index design with a retention sweep). GroupState TTL is
+    stored-index design with a retention sweep). State TTL is
     LAZY — an expired bucket is evicted on the next micro-batch in
     which it receives no data; a bucket that keeps receiving clones
     keeps its canonical (sliding horizon). Default None keeps
@@ -405,9 +407,6 @@ def streaming_band_registry(
     Within a micro-batch, rows resolve in doc_id order, so a
     full-history single batch replays exactly like the batch twin
     (band_registry_batch) — that equivalence is pinned in tests."""
-    import pandas as pd  # noqa: PLC0415 — executor-side import
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = StructType(
         [
             StructField("band", IntegerType()),
@@ -419,14 +418,9 @@ def streaming_band_registry(
     )
     state_schema = StructType([StructField("first_id", LongType())])
 
-    def register(key, pdf_iter, state: GroupState):
-        if ttl_seconds is not None and state.hasTimedOut:
-            # TTL eviction: drop the bucket's canonical and emit
-            # nothing — the next claimant re-registers as first.
-            state.remove()
-            return
-        first = state.get[0] if state.exists else None
-        pdf = pd.concat(list(pdf_iter)).sort_values("doc_id").copy()
+    def register(key, pdf, state):
+        (first,) = state
+        pdf = pdf.sort_values("doc_id").copy()
         canon, flags = [], []
         for d in pdf["doc_id"]:
             if first is None:
@@ -437,23 +431,16 @@ def streaming_band_registry(
             canon.append(first)
         pdf["canonical_id"] = canon
         pdf["is_first"] = flags
-        state.update((first,))
-        if ttl_seconds is not None:
-            # sliding horizon: each touch re-arms the bucket's clock
-            state.setTimeoutDuration(ttl_seconds * 1000)
-        yield pdf[["band", "bucket", "doc_id", "canonical_id", "is_first"]]
+        return (first,), pdf[["band", "bucket", "doc_id", "canonical_id", "is_first"]]
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_seconds is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return (
-        _doc_bands(docs, id_col, text_col, ngram)
-        .groupBy("band", "bucket")
-        .applyInPandasWithState(
-            register, out_schema, state_schema, "append", timeout
-        )
+    # sliding horizon: each touch re-arms the bucket's clock; on TTL
+    # eviction the bucket's canonical is dropped and nothing is
+    # emitted — the next claimant re-registers as first
+    ttl = None if ttl_seconds is None else ("processing", lambda _: ttl_seconds * 1000)
+    bands = _doc_bands(docs, id_col, text_col, ngram)
+    return keyed_fold(
+        bands, ["band", "bucket"], out_schema, state_schema, (None,), register,
+        timeout=ttl, expire=lambda key, state: None,
     )
 
 
@@ -489,7 +476,7 @@ def streaming_sessions(
     gap_seconds: int = 300,
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """Custom stateful sessionization via applyInPandasWithState with
+    """Custom stateful sessionization via keyed_fold with
     EVENT-TIME TIMEOUT — the third stateful pattern next to the
     throttle (processing-order state) and the band registry
     (set-membership state): per user, an open session (start, end,
@@ -505,7 +492,6 @@ def streaming_sessions(
     ACTIVE user and the watermark bounds how long a user can stay
     active, so state size is O(users active within the horizon)."""
     import pandas as pd  # noqa: PLC0415 — executor-side import
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     out_schema = StructType(
         [
@@ -537,21 +523,10 @@ def streaming_sessions(
             "sum_value": sv_cents / 100.0,
         }
 
-    def sessionize(key, pdf_iter, state: GroupState):
+    def sessionize(key, pdf, cur):
         uid = key[0]
         closed = []
-        if state.hasTimedOut:
-            start_us, end_us, n, sv = state.get
-            closed.append(_row(uid, start_us, end_us, n, sv))
-            state.remove()
-            yield pd.DataFrame(closed)
-            return
-        pdf = pd.concat(list(pdf_iter))
-        if pdf.empty:
-            yield pd.DataFrame(columns=out_schema.fieldNames())
-            return
         pdf = pdf.sort_values(["ts", "event_id"])
-        cur = state.get if state.exists else None
         for ts, value in zip(pdf["ts"], pdf["value"]):
             t_us = int(pd.Timestamp(ts).value // 1000)
             v = float(value) if value is not None else 0.0
@@ -575,19 +550,16 @@ def streaming_sessions(
                     cur[2] + 1,
                     cur[3] + cents,
                 )
-        state.update(cur)
-        # flush the trailing session once the watermark clears end+gap
-        state.setTimeoutTimestamp((cur[1] // 1000) + gap_seconds * 1000)
-        yield pd.DataFrame(closed) if closed else pd.DataFrame(
-            columns=out_schema.fieldNames()
-        )
+        return cur, (pd.DataFrame(closed) if closed else None)
 
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            sessionize, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
+    def flush(key, cur):
+        return pd.DataFrame([_row(key[0], *cur)])
+
+    # flush the trailing session once the watermark clears end+gap
+    deadline = ("event", lambda cur: (cur[1] // 1000) + gap_seconds * 1000)
+    return keyed_fold(
+        events.withWatermark("ts", watermark), ["user_id"], out_schema, state_schema, None,
+        sessionize, timeout=deadline, expire=flush,
     )
 
 
@@ -615,13 +587,7 @@ def stream_repeat_span_gate(
         spans = incremental_repeat_spans(batch_df, index_docs, k=k)
         spans.write.mode("append").parquet(sink_dir)
 
-    (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_batches(docs_stream, checkpoint_dir, handle)
 
 
 def streaming_kmv(
@@ -643,9 +609,6 @@ def streaming_kmv(
     identical n_seen, identical kth hash, identical 4-decimal
     estimate. That equivalence is pinned in tests across multi-file
     micro-batches."""
-    import pandas as pd  # noqa: PLC0415 — executor-side import
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from ..operators.sketches import HASH_SPACE, md5_int
 
     out_schema = StructType(
@@ -659,29 +622,23 @@ def streaming_kmv(
         [StructField("hashes", ArrayType(LongType()))]
     )
 
-    def sketch(key, pdf_iter, state: GroupState):
-        held = list(state.get[0]) if state.exists else []
-        new = set()
-        for pdf in pdf_iter:
-            new.update(int(h) for h in pdf["h"])
+    def sketch(key, pdf, state):
+        held = list(state[0])
+        new = {int(h) for h in pdf["h"]}
         merged = sorted(set(held) | new)[:k]
-        state.update((merged,))
         n_seen = len(merged)
         if n_seen < k:
             est = float(n_seen)
         else:
             est = (k - 1) / (merged[-1] / HASH_SPACE)
-        yield pd.DataFrame(
-            {"group": [key[0]], "n_seen": [n_seen], "est_distinct": [round(est, 4)]}
-        )
+        out = {"group": [key[0]], "n_seen": [n_seen], "est_distinct": [round(est, 4)]}
+        return (merged,), out
 
     hashed = events.select(
         F.col(group_col).cast("string").alias("g"),
         md5_int(F.col(value_col).cast("string")).alias("h"),
     )
-    return hashed.groupBy("g").applyInPandasWithState(
-        sketch, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(hashed, ["g"], out_schema, state_schema, ([],), sketch)
 
 
 def streaming_cms(
@@ -699,9 +656,6 @@ def streaming_cms(
     full drain equals cms_build over the same history exactly (the
     CMS is a sum — order-free). Pinned by a multi-batch equivalence
     test that also round-trips cms_estimate over the drained sketch."""
-    import pandas as pd  # noqa: PLC0415 — executor-side import
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from ..operators.sketches import _cms_pos
 
     out_schema = StructType(
@@ -713,12 +667,9 @@ def streaming_cms(
     )
     state_schema = StructType([StructField("cnt", LongType())])
 
-    def bump(key, pdf_iter, state: GroupState):
-        cnt = state.get[0] if state.exists else 0
-        add = sum(len(pdf) for pdf in pdf_iter)
-        cnt += int(add)
-        state.update((cnt,))
-        yield pd.DataFrame({"seed": [key[0]], "pos": [key[1]], "cnt": [cnt]})
+    def bump(key, pdf, state):
+        cnt = state[0] + len(pdf)
+        return (cnt,), {"seed": [key[0]], "pos": [key[1]], "cnt": [cnt]}
 
     cells = events.select(
         F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias("seed"),
@@ -727,9 +678,7 @@ def streaming_cms(
         F.col("seed").cast("int"),
         _cms_pos(F.col("key"), F.col("seed"), width).cast("int").alias("pos"),
     )
-    return cells.groupBy("seed", "pos").applyInPandasWithState(
-        bump, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(cells, ["seed", "pos"], out_schema, state_schema, (0,), bump)
 
 
 def streaming_hll(
@@ -749,9 +698,6 @@ def streaming_hll(
 
     Completes the streaming sketch family: KMV (k-smallest merge),
     CMS (counter add), HLL (register max)."""
-    import pandas as pd  # noqa: PLC0415 — executor-side import
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from ..operators.dedup import md5_int
 
     out_schema = StructType(
@@ -767,25 +713,21 @@ def streaming_hll(
     alpha = 0.7213 / (1.0 + 1.079 / m)
     full = 1 << 55
 
-    def merge(key, pdf_iter, state: GroupState):
-        regs = list(state.get[0]) if state.exists else [0] * m
-        for pdf in pdf_iter:
-            for b, r in zip(pdf["bucket"], pdf["rank"]):
-                b = int(b)
-                if int(r) > regs[b]:
-                    regs[b] = int(r)
-        state.update((regs,))
+    def merge(key, pdf, state):
+        regs = list(state[0])
+        for b, r in zip(pdf["bucket"], pdf["rank"]):
+            b = int(b)
+            if int(r) > regs[b]:
+                regs[b] = int(r)
         used = [r for r in regs if r > 0]
         inv_scaled = sum(1 << (55 - r) for r in used) + (m - len(used)) * full
         est = alpha * m * m * float(full) / float(inv_scaled)
-        yield pd.DataFrame(
-            {
-                "group": [key[0]],
-                "n_buckets_used": [len(used)],
-                "inv_sum_scaled": [inv_scaled],
-                "est_distinct": [round(est, 4)],
-            }
-        )
+        return (regs,), {
+            "group": [key[0]],
+            "n_buckets_used": [len(used)],
+            "inv_sum_scaled": [inv_scaled],
+            "est_distinct": [round(est, 4)],
+        }
 
     base = events.select(
         F.col(group_col).cast("string").alias("g"),
@@ -798,9 +740,7 @@ def streaming_hll(
         (F.col("_h") % m).cast("int").alias("bucket"),
         rank.cast("int").alias("rank"),
     )
-    return cells.groupBy("g").applyInPandasWithState(
-        merge, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(cells, ["g"], out_schema, state_schema, ([0] * m,), merge)
 
 
 def streaming_topk(
@@ -819,16 +759,14 @@ def streaming_topk(
     Guarantees (pinned by the equivalence test): every stored count
     obeys true ≤ count ≤ true + err, and any item whose true
     frequency exceeds n/capacity is IN the table after a full drain.
-    Within a micro-batch, rows fold in a deterministic order: each
-    pandas chunk is stably sorted by item value before folding —
+    Within a micro-batch, rows fold in a deterministic order: the
+    key's whole micro-batch is sorted by item value before folding
+    (the twin runner replays the same sort over the whole batch) —
     SpaceSaving's guarantees hold for ANY order; the sort just makes
     reruns reproducible.
 
     Completes the streaming sketch family: KMV / HLL (distinct), CMS
     (frequency), SpaceSaving (top-k identity)."""
-    import pandas as pd  # noqa: PLC0415 — executor-side import
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = StructType(
         [
             StructField("group", StringType()),
@@ -845,43 +783,30 @@ def streaming_topk(
         ]
     )
 
-    def fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            items, cnts, errs = (list(x) for x in state.get)
-        else:
-            items, cnts, errs = [], [], []
+    def fold(key, pdf, state):
+        items, cnts, errs = state
         tbl = {it: [c, e] for it, c, e in zip(items, cnts, errs)}
-        for pdf in pdf_iter:
-            for it in pdf.sort_values("item")["item"]:
-                it = str(it)
-                if it in tbl:
-                    tbl[it][0] += 1
-                elif len(tbl) < capacity:
-                    tbl[it] = [1, 0]
-                else:
-                    # evict the min-count candidate (tie: lexicographic)
-                    victim = min(tbl, key=lambda k: (tbl[k][0], k))
-                    vcnt = tbl[victim][0]
-                    del tbl[victim]
-                    tbl[it] = [vcnt + 1, vcnt]
+        for it in pdf.sort_values("item")["item"]:
+            it = str(it)
+            if it in tbl:
+                tbl[it][0] += 1
+            elif len(tbl) < capacity:
+                tbl[it] = [1, 0]
+            else:
+                # evict the min-count candidate (tie: lexicographic)
+                victim = min(tbl, key=lambda k: (tbl[k][0], k))
+                vcnt = tbl[victim][0]
+                del tbl[victim]
+                tbl[it] = [vcnt + 1, vcnt]
         ks = sorted(tbl)
-        state.update((ks, [tbl[k][0] for k in ks], [tbl[k][1] for k in ks]))
-        yield pd.DataFrame(
-            {
-                "group": [key[0]] * len(ks),
-                "item": ks,
-                "cnt": [tbl[k][0] for k in ks],
-                "err": [tbl[k][1] for k in ks],
-            }
-        )
+        cnt, err = [tbl[k][0] for k in ks], [tbl[k][1] for k in ks]
+        return (ks, cnt, err), {"group": [key[0]] * len(ks), "item": ks, "cnt": cnt, "err": err}
 
     base = events.select(
         F.col(group_col).cast("string").alias("g"),
         F.col(item_col).cast("string").alias("item"),
     )
-    return base.groupBy("g").applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(base, ["g"], out_schema, state_schema, ([], [], []), fold)
 
 
 def streaming_priority_sample(
@@ -901,10 +826,9 @@ def streaming_priority_sample(
     size forever.
 
     Emits the current top-k (+ est_weight vs the running tau) every
-    batch; the LAST emission per id set is the final sample."""
-    import pandas as pd  # noqa: PLC0415 — executor-side import
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    batch; the LAST emission per id set is the final sample. All rows
+    share one key, so the fold holds the whole micro-batch in memory
+    (maxFilesPerTrigger bounds it)."""
     from ..operators.dedup import md5_int
 
     out_schema = StructType(
@@ -923,31 +847,20 @@ def streaming_priority_sample(
         ]
     )
 
-    def fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            pris, ids, ws = (list(x) for x in state.get)
-        else:
-            pris, ids, ws = [], [], []
+    def fold(key, pdf, state):
+        pris, ids, ws = state
         entries = {(-p, i): (p, i, w) for p, i, w in zip(pris, ids, ws)}
-        for pdf in pdf_iter:
-            for p, i, w in zip(pdf["priority"], pdf["_id"], pdf["_w"]):
-                entries[(-int(p), int(i))] = (int(p), int(i), int(w))
+        for p, i, w in zip(pdf["priority"], pdf["_id"], pdf["_w"]):
+            entries[(-int(p), int(i))] = (int(p), int(i), int(w))
         top = [entries[kk] for kk in sorted(entries)[: k + 1]]
-        state.update(
-            ([p for p, _, _ in top], [i for _, i, _ in top], [w for _, _, w in top])
-        )
         sample = top[:k]
         tau = top[k][0] if len(top) > k else 0
-        yield pd.DataFrame(
-            {
-                "doc_id": [i for _, i, _ in sample],
-                "weight": [w for _, _, w in sample],
-                "priority": [p for p, _, _ in sample],
-                "est_weight": [
-                    float(max(w << 30, tau)) / float(1 << 30) for _, _, w in sample
-                ],
-            }
-        )
+        return ([p for p, _, _ in top], [i for _, i, _ in top], [w for _, _, w in top]), {
+            "doc_id": [i for _, i, _ in sample],
+            "weight": [w for _, _, w in sample],
+            "priority": [p for p, _, _ in sample],
+            "est_weight": [float(max(w << 30, tau)) / float(1 << 30) for _, _, w in sample],
+        }
 
     u = (
         md5_int(F.concat(F.lit(salt + ":"), F.col("_id").cast("string")))
@@ -963,9 +876,7 @@ def streaming_priority_sample(
         .withColumn("_g", F.lit(1))
         .drop("_u")
     )
-    return base.groupBy("_g").applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(base, ["_g"], out_schema, state_schema, ([], [], []), fold)
 
 
 def streaming_cdc_apply(
@@ -986,7 +897,6 @@ def streaming_cdc_apply(
     Payload columns are derived from the input schema, so the
     operator is generic over any changelog shape."""
     import pandas as pd  # noqa: PLC0415 — executor-side import
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     payload = [
         f for f in changes.schema.fields if f.name not in (key_col, seq_col, op_col)
@@ -1000,16 +910,13 @@ def streaming_cdc_apply(
     )
     pnames = [f.name for f in payload]
 
-    def fold(key, pdf_iter, state: GroupState):
-        cur = tuple(state.get) if state.exists else None  # (seq, op, *payload)
-        for pdf in pdf_iter:
-            for row in pdf.itertuples(index=False):
-                d = row._asdict()
-                cand = (d[seq_col], d[op_col], *[d[p] for p in pnames])
-                if cur is None or (cand[0], cand[1]) > (cur[0], cur[1]):
-                    cur = cand
-        state.update(cur)
-        yield pd.DataFrame(
+    def fold(key, pdf, cur):  # cur: (seq, op, *payload), None for a new key
+        for row in pdf.itertuples(index=False):
+            d = row._asdict()
+            cand = (d[seq_col], d[op_col], *[d[p] for p in pnames])
+            if cur is None or (cand[0], cand[1]) > (cur[0], cur[1]):
+                cur = cand
+        return cur, pd.DataFrame(
             [
                 {
                     key_col: key[0],
@@ -1020,9 +927,7 @@ def streaming_cdc_apply(
             ]
         )
 
-    return changes.groupBy(key_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(changes, [key_col], out_schema, state_schema, None, fold)
 
 
 def stream_ingest_curated(
@@ -1055,13 +960,7 @@ def stream_ingest_curated(
         ).filter(~F.col("contaminated"))
         curated.write.mode("append").parquet(sink_dir)
 
-    (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_batches(docs_stream, checkpoint_dir, handle)
 
 
 def _doc_line_hashes(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1104,9 +1003,6 @@ def streaming_line_registry(
     matching the boilerplate horizon. Within a micro-batch rows
     resolve in doc_id order, so a full-history single-batch drain
     replays exactly like line_registry_batch — pinned in tests."""
-    import pandas as pd  # noqa: PLC0415 — executor-side import
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = StructType(
         [
             StructField("line_h", LongType()),
@@ -1117,9 +1013,9 @@ def streaming_line_registry(
     )
     state_schema = StructType([StructField("n_docs", LongType())])
 
-    def count_docs(key, pdf_iter, state: GroupState):
-        n = state.get[0] if state.exists else 0
-        pdf = pd.concat(list(pdf_iter)).sort_values("doc_id").copy()
+    def count_docs(key, pdf, state):
+        (n,) = state
+        pdf = pdf.sort_values("doc_id").copy()
         running, flags = [], []
         for _ in range(len(pdf)):
             n += 1
@@ -1127,16 +1023,10 @@ def streaming_line_registry(
             flags.append(n > max_docs)
         pdf["n_docs"] = running
         pdf["is_boiler"] = flags
-        state.update((int(n),))
-        yield pdf[["line_h", "doc_id", "n_docs", "is_boiler"]]
+        return (int(n),), pdf[["line_h", "doc_id", "n_docs", "is_boiler"]]
 
-    return (
-        _doc_line_hashes(docs, id_col, text_col)
-        .groupBy("line_h")
-        .applyInPandasWithState(
-            count_docs, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
-    )
+    lines = _doc_line_hashes(docs, id_col, text_col)
+    return keyed_fold(lines, ["line_h"], out_schema, state_schema, (0,), count_docs)
 
 
 def line_registry_batch(
@@ -1183,9 +1073,6 @@ def streaming_k_anon_gate(
     cumulative count. Within a micro-batch rows resolve in id order,
     so a full-history single-batch drain replays exactly like
     k_anon_gate_batch — pinned in tests."""
-    import pandas as pd  # noqa: PLC0415 — executor-side import
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     qi_cols = list(qi_cols)
     cols = qi_cols + [id_col]
     base = rows.select(*cols)
@@ -1198,18 +1085,15 @@ def streaming_k_anon_gate(
     )
     state_schema = StructType([StructField("class_n", LongType())])
 
-    def count_class(key, pdf_iter, state: GroupState):
-        n = state.get[0] if state.exists else 0
-        pdf = pd.concat(list(pdf_iter)).sort_values(id_col).copy()
+    def count_class(key, pdf, state):
+        (n,) = state
+        pdf = pdf.sort_values(id_col).copy()
         running = list(range(n + 1, n + 1 + len(pdf)))
         pdf["class_n"] = running
         pdf["releasable"] = [c >= k for c in running]
-        state.update((int(n + len(pdf)),))
-        yield pdf[cols + ["class_n", "releasable"]]
+        return (int(n + len(pdf)),), pdf[cols + ["class_n", "releasable"]]
 
-    return base.groupBy(*qi_cols).applyInPandasWithState(
-        count_class, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(base, qi_cols, out_schema, state_schema, (0,), count_class)
 
 
 def k_anon_gate_batch(
@@ -1292,9 +1176,6 @@ def streaming_source_gate(
     ones; per-batch work is a vectorized sum. A full-history
     single-batch drain equals source_suppression row-for-row — pinned
     in tests."""
-    import pandas as pd  # noqa: PLC0415 — executor-side import
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     src_field = flagged.schema[source_col]
     out_schema = StructType(
         [
@@ -1309,33 +1190,23 @@ def streaming_source_gate(
         [StructField("n_docs", LongType()), StructField("n_pass", LongType())]
     )
 
-    def roll(key, pdf_iter, state: GroupState):
-        n, p = state.get if state.exists else (0, 0)
-        for pdf in pdf_iter:
-            n += len(pdf)
-            p += int(pdf[flag_col].sum())
-        state.update((int(n), int(p)))
+    def roll(key, pdf, state):
+        n, p = state
+        n += len(pdf)
+        p += int(pdf[flag_col].sum())
         bp = (10000 * p) // n if n else 0
-        yield pd.DataFrame(
-            {
-                source_col: [key[0]],
-                "n_docs": [n],
-                "n_pass": [p],
-                "pass_bp": [bp],
-                "suppressed": [n >= min_docs and bp < min_pass_bp],
-            }
-        )
+        return (int(n), int(p)), {
+            source_col: [key[0]],
+            "n_docs": [n],
+            "n_pass": [p],
+            "pass_bp": [bp],
+            "suppressed": [n >= min_docs and bp < min_pass_bp],
+        }
 
-    return (
-        flagged.select(source_col, flag_col)
-        .groupBy(source_col)
-        # append mode: each emission is an EVENT ("the rollup as of
-        # this batch"), so file sinks work; consumers key on the
-        # latest n_docs per source
-        .applyInPandasWithState(
-            roll, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
-    )
+    # each emission is an EVENT ("the rollup as of this batch");
+    # consumers key on the latest n_docs per source
+    base = flagged.select(source_col, flag_col)
+    return keyed_fold(base, [source_col], out_schema, state_schema, (0, 0), roll)
 
 
 def streaming_scene_cuts(
@@ -1355,9 +1226,6 @@ def streaming_scene_cuts(
     Scale/state: keyed by video id (one shuffle); state is one long
     per live video regardless of frame count; per-batch work is a
     vectorized diff."""
-    import pandas as pd  # noqa: PLC0415 — executor-side import
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     base = frames.select(id_col, "frame_index", "frame_sig")
     out_schema = StructType(
         [base.schema[c] for c in (id_col, "frame_index", "frame_sig")]
@@ -1365,20 +1233,17 @@ def streaming_scene_cuts(
     )
     state_schema = StructType([StructField("last_sig", LongType())])
 
-    def fold(key, pdf_iter, state: GroupState):
-        last = state.get[0] if state.exists else -1
-        pdf = pd.concat(list(pdf_iter)).sort_values("frame_index").copy()
+    def fold(key, pdf, state):
+        (last,) = state
+        pdf = pdf.sort_values("frame_index").copy()
         cuts = []
         for s in pdf["frame_sig"].tolist():
             cuts.append(last >= 0 and abs(int(s) - last) > threshold)
             last = int(s)
         pdf["is_cut"] = cuts
-        state.update((last,))
-        yield pdf[[id_col, "frame_index", "frame_sig", "is_cut"]]
+        return (last,), pdf[[id_col, "frame_index", "frame_sig", "is_cut"]]
 
-    return base.groupBy(id_col).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(base, [id_col], out_schema, state_schema, (-1,), fold)
 
 
 def streaming_t_closeness_gate(
@@ -1409,9 +1274,7 @@ def streaming_t_closeness_gate(
     operator, so a full-history single-batch drain replays
     t_closeness_gate_batch row-for-row (pinned in tests).
     """
-    import pandas as pd  # noqa: PLC0415 — executor-side import
     from bisect import bisect_right
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     qi_cols = list(qi_cols)
     ref = sorted((int(b), int(n)) for b, n in ref_dist)
@@ -1440,9 +1303,9 @@ def streaming_t_closeness_gate(
     )
     state_schema = StructType([StructField("counts", ArrayType(LongType()))])
 
-    def gate(key, pdf_iter, state: GroupState):
-        counts = list(state.get[0]) if state.exists else [0] * m
-        pdf = pd.concat(list(pdf_iter)).sort_values(id_col).copy()
+    def gate(key, pdf, state):
+        counts = list(state[0])
+        pdf = pdf.sort_values(id_col).copy()
         out_n, out_emd, out_bp, out_ok = [], [], [], []
         for b in pdf[bucket_col]:
             pos = bucket_pos.get(int(b))
@@ -1470,12 +1333,10 @@ def streaming_t_closeness_gate(
         pdf["emd_scaled"] = out_emd
         pdf["t_bp"] = out_bp
         pdf["releasable"] = out_ok
-        state.update(([int(c) for c in counts],))
-        yield pdf[cols + ["class_n", "emd_scaled", "t_bp", "releasable"]]
+        counts = [int(c) for c in counts]
+        return (counts,), pdf[cols + ["class_n", "emd_scaled", "t_bp", "releasable"]]
 
-    return base.groupBy(*qi_cols).applyInPandasWithState(
-        gate, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_fold(base, qi_cols, out_schema, state_schema, ([0] * m,), gate)
 
 
 def t_closeness_gate_batch(

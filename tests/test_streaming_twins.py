@@ -11,10 +11,10 @@ bit-identical to its batch twin over the full history.
 Per-operator quirks (how "the final answer" is read off an
 append-mode sink) live inside that operator's runner; the
 enumeration, the corpus discipline, and the completeness guard are
-shared. The guard scans pipeline.py for applyInPandasWithState /
-dropDuplicatesWithinWatermark users, so a NEW stateful operator
-cannot ship without registering a runner here (or an explicit,
-reasoned exclusion).
+shared. The guard finds pipeline.py's keyed_fold /
+dropDuplicatesWithinWatermark callers through the AST, so a NEW
+stateful operator cannot ship without registering a runner here (or
+an explicit, reasoned exclusion).
 
 Batches are always written in id/ts order: the batch twins define
 "arrival order" as id order (the documented single-batch-from-empty-
@@ -733,6 +733,27 @@ TWINS = {
 }
 
 
+# the 14 keyed_fold operators and the dropDuplicatesWithinWatermark
+# enqueue; a new stateful operator joins this set and TWINS together
+STATEFUL_OPERATORS = {
+    "streaming_enqueue",
+    "throttled_links",
+    "streaming_band_registry",
+    "streaming_sessions",
+    "streaming_kmv",
+    "streaming_cms",
+    "streaming_hll",
+    "streaming_topk",
+    "streaming_priority_sample",
+    "streaming_cdc_apply",
+    "streaming_line_registry",
+    "streaming_k_anon_gate",
+    "streaming_source_gate",
+    "streaming_scene_cuts",
+    "streaming_t_closeness_gate",
+}
+
+
 @pytest.mark.parametrize("name", sorted(TWINS))
 def test_stream_batch_twin_bit_equality(spark, tmp_path, name):
     got, want = TWINS[name](spark, str(tmp_path))
@@ -743,19 +764,30 @@ def test_stream_batch_twin_bit_equality(spark, tmp_path, name):
 def test_every_stateful_operator_has_a_twin_runner():
     """A NEW stateful streaming operator cannot ship without a twin
     runner here (or an explicit, reasoned exclusion below)."""
+    import ast
     import inspect
-    import re
 
     from joblink_etl_spark.streaming import pipeline
 
-    src = inspect.getsource(pipeline)
-    stateful = set()
-    for m in re.finditer(r"^def (\w+)\(", src, re.M):
-        name = m.group(1)
-        end = src.find("\ndef ", m.end())
-        body = src[m.start(): end if end > 0 else len(src)]
-        if "applyInPandasWithState" in body or "dropDuplicatesWithinWatermark" in body:
-            stateful.add(name)
+    def stateful_call(node):
+        if not isinstance(node, ast.Call):
+            return False
+        f = node.func
+        return (isinstance(f, ast.Name) and f.id == "keyed_fold") or (
+            isinstance(f, ast.Attribute) and f.attr == "dropDuplicatesWithinWatermark"
+        )
+
+    # calls found through the AST, so a docstring naming the state API
+    # cannot make an operator look stateful
+    tree = ast.parse(inspect.getsource(pipeline))
+    stateful = {
+        fn.name
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef) and any(map(stateful_call, ast.walk(fn)))
+    }
+    assert stateful == STATEFUL_OPERATORS, (
+        f"stateful operators found: {sorted(stateful)}; expected {sorted(STATEFUL_OPERATORS)}"
+    )
     # watermark-window aggregations (windowed/session_event_counts)
     # carry state too but are Spark-built-in operators with their own
     # dedicated equivalence tests in test_streaming.py — they are not
