@@ -14,7 +14,8 @@ don't need the call make none). Only the UDF's input columns cross;
 the batch's other columns stay in the JVM. An eager bounded ``pin()``
 after the fetch, the decide and the escalation runs each of these once
 per row and keeps every later plan free of the earlier stages; the
-drain loop pins the tracker and queues once per cycle.
+drain loop pins the caller's queue once per drain and the tracker and
+queues once per cycle.
 
 The reference's api_company/api_role fetch outputs are carried but
 (faithfully) never consumed — both reference variants compute and
@@ -49,6 +50,11 @@ DECIDE_COLS = (
 # calls, S7-S12), and lineage recomputation would re-fire them with
 # different results.
 DRAIN_PIN_REASON = "side-effecting fetch/LLM calls must run exactly once per drain cycle"
+# Why drain_all pins the caller's queue on entry: the first cycle reads
+# it three times (emptiness check, batch selection, dequeue), and a
+# queue plan need not be deterministic (current_timestamp, a source
+# that changes under it), so every read must see one snapshot.
+QUEUE_PIN_REASON = "every read of the caller's queue in a drain must see one snapshot"
 
 
 def escalate_weak_parses(parsed: DataFrame, renderer_client) -> DataFrame:
@@ -246,19 +252,20 @@ def drain_all(
     reference stops at a 285 s wall-clock budget (Apps Script cap) —
     an orchestration concern; here max_cycles bounds work instead.
 
-    Each cycle pins its outputs (``DRAIN_PIN_REASON``) so the logical
-    plan stays O(1) in cycle count (ST2's incremental-batch semantics,
-    not one giant lazy graph). The tracker/queue/notes_queue snapshots
+    The caller's queue is pinned once on entry (``QUEUE_PIN_REASON``),
+    so its plan runs once per drain. Each cycle pins its outputs
+    (``DRAIN_PIN_REASON``) so the logical plan stays O(1) in cycle
+    count (ST2's incremental-batch semantics, not one giant lazy
+    graph). The tracker/queue/notes_queue snapshots
     are table-scale — the reference's tracker is a spreadsheet;
     warehouse-scale trackers take merge_writeback_incremental's
     O(batch) partition path instead of this in-memory hand-off.
     """
-    from ..schemas import NOTES_QUEUE_SCHEMA
+    from ..schemas import NOTES_QUEUE_SCHEMA, empty_table
 
-    spark = tracker.sparkSession
-    notes_queue = notes_queue if notes_queue is not None else spark.createDataFrame(
-        [], NOTES_QUEUE_SCHEMA
-    )
+    if notes_queue is None:
+        notes_queue = empty_table(tracker.sparkSession, NOTES_QUEUE_SCHEMA)
+    queue = pin(queue, "corpus", eager=True, reason=QUEUE_PIN_REASON)
     for _ in range(max_cycles):
         did_work = False
         if not queue.filter(F.col("status") == "queued").isEmpty():

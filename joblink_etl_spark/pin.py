@@ -28,6 +28,20 @@ Every pin therefore declares its scale where it is made:
   mandatory).
 
 ``tests/test_pin_census.py`` counts the pins per function and scale.
+
+A pin also drops the constraints Catalyst derives for the pinned plan
+(its inferred ``isnotnull`` and equality predicates). Spark's
+``localCheckpoint`` hands that whole derived set to the pinned
+relation, and on a wide plan (the drain's decide tree) deriving it
+cost several times the pin's own job. ``pin()`` therefore optimizes
+its input first, under the caller's setting, so that the pinned plan
+keeps its own inferred filters, and then checkpoints with
+``spark.sql.constraintPropagation.enabled`` off, restoring the
+caller's value afterwards. Plans over a pin see no constraints from
+below it: they infer no filters from them, and keep filters those
+constraints implied (an ``isnotnull`` on a pinned column; the rows are
+the same). The setting is toggled on the session, so concurrent
+queries on one session must not pin at the same time.
 """
 
 from __future__ import annotations
@@ -35,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 SCALES = ("bounded", "candidate", "corpus")
+CONSTRAINTS_KEY = "spark.sql.constraintPropagation.enabled"
 
 
 def pin(
@@ -58,6 +73,18 @@ def pin(
         )
     if enabled is not None and not enabled:
         return df
-    # looked up per call, so a class-level wrapper (perfbench/trace.py)
-    # sees every pin
-    return df.localCheckpoint(eager=eager)
+    # optimized under the caller's setting: the pinned plan keeps its
+    # inferred filters
+    df._jdf.queryExecution().optimizedPlan()
+    conf = df.sparkSession.conf
+    caller = conf.getAll.get(CONSTRAINTS_KEY)
+    conf.set(CONSTRAINTS_KEY, "false")
+    try:
+        # looked up per call, so a class-level wrapper (perfbench/trace.py)
+        # sees every pin
+        return df.localCheckpoint(eager=eager)
+    finally:
+        if caller is None:
+            conf.unset(CONSTRAINTS_KEY)
+        else:
+            conf.set(CONSTRAINTS_KEY, caller)

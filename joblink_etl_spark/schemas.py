@@ -117,5 +117,10 @@ def validate_or_heal(df: DataFrame, schema: StructType) -> DataFrame:
 
 def empty_table(spark, schema: StructType) -> DataFrame:
     """CREATE TABLE IF NOT EXISTS twin (S3): an empty DF with the
-    canonical schema."""
-    return spark.createDataFrame([], schema)
+    canonical (nullable) schema. Catalyst optimizes it to an empty
+    ``LocalRelation``, so it runs no Python task and plans over it
+    prune it; ``createDataFrame([], schema)`` would back it with a
+    Python RDD that runs jobs every time it is read."""
+    return spark.range(1).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    ).limit(0)

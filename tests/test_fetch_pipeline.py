@@ -458,3 +458,23 @@ def test_drain_all_repeated_queue_key_writes_one_row(spark):
     assert (row["status"], row["company_auto"]) == ("ok", "Site 303")
     assert row["source"].count("parse:{") == 1 and row["source"].count("notes:{") == 1
     assert out["queue"].count() == 0
+
+
+def test_drain_all_reads_the_callers_queue_once(spark):
+    """The caller's queue plan runs once per drain, however many times
+    the drain reads the queue: a UDF in it counts its row evaluations
+    through an accumulator."""
+    from pyspark.sql.types import BooleanType
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def seen(_key):
+        acc.add(1)
+        return True
+
+    counted = F.udf(seen, BooleanType()).asNondeterministic()
+    tracker = _tracker(spark, [("S", 2, URLS["direct"], "", "", "", "", "", "", "")])
+    queue = _queue_from(spark, tracker).filter(counted(F.col("row_index")))
+    out = drain_all(tracker, queue, None, HTTP, RENDERER, LLM, {"one-line hook": "builder"})
+    assert acc.value == 1
+    assert [r["status"] for r in out["tracker"].collect()] == ["ok"]

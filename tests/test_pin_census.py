@@ -12,7 +12,7 @@ import pytest
 from conftest import job_ids
 
 import joblink_etl_spark
-from joblink_etl_spark.pin import SCALES, pin
+from joblink_etl_spark.pin import CONSTRAINTS_KEY, SCALES, pin
 
 PKG_ROOT = os.path.dirname(os.path.abspath(joblink_etl_spark.__file__))
 
@@ -31,7 +31,7 @@ PIN_CENSUS: dict[tuple[str, str], dict[str, int]] = {
     ("operators/graph.py", "ancestor_rollup"): {"candidate": 2},
     ("operators/fetch.py", "fetch_smart"): {"bounded": 1},
     ("operators/pipeline.py", "parse_batch"): {"bounded": 2},
-    ("operators/pipeline.py", "drain_all"): {"corpus": 5},
+    ("operators/pipeline.py", "drain_all"): {"corpus": 6},
     ("operators/writeback.py", "merge_writeback_incremental"): {"bounded": 1},
     ("operators/rank.py", "grouped_rank"): {"corpus": 1},
     ("operators/sampling.py", "cluster_balanced_sample"): {"corpus": 1},
@@ -144,6 +144,47 @@ def test_pin_contract(spark):
     assert pin(df, "corpus", enabled=False) is df
     assert job_ids(spark, lambda: pin(df, "bounded"), "pin-lazy") == []
     assert len(job_ids(spark, lambda: pin(df, "corpus", eager=True, reason="r"), "pin-eager")) == 1
+
+
+def test_pin_drops_derived_constraints(spark, sf_dir):
+    """The pinned plan keeps the filters Catalyst infers for it (the
+    join's isnotnull), but the pin hands no derived constraints to the
+    plans over it."""
+    from pyspark.sql import functions as F
+
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    customers = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    df = orders.join(customers, F.col("o_custkey") == F.col("c_custkey"))
+    pinned = pin(df, "bounded")
+    assert "isnotnull(o_custkey" in df._jdf.queryExecution().optimizedPlan().toString()
+    assert pinned._jdf.queryExecution().analyzed().constraints().isEmpty()
+
+
+def test_pin_restores_constraint_setting(spark, monkeypatch):
+    """pin() turns constraint propagation off for its checkpoint only:
+    the caller's setting, unset or set, is back afterwards, also when
+    the checkpoint raises."""
+    df = spark.range(3)
+    assert CONSTRAINTS_KEY not in spark.conf.getAll
+    pin(df, "bounded")
+    assert CONSTRAINTS_KEY not in spark.conf.getAll
+    try:
+        spark.conf.set(CONSTRAINTS_KEY, "false")
+        pin(df, "bounded")
+        assert spark.conf.get(CONSTRAINTS_KEY) == "false"
+        spark.conf.set(CONSTRAINTS_KEY, "true")
+        seen = []
+
+        def failing_checkpoint(self, eager=True):
+            seen.append(spark.conf.get(CONSTRAINTS_KEY))
+            raise RuntimeError("checkpoint failed")
+
+        monkeypatch.setattr(type(df), "localCheckpoint", failing_checkpoint)
+        with pytest.raises(RuntimeError):
+            pin(df, "bounded")
+        assert seen == ["false"] and spark.conf.get(CONSTRAINTS_KEY) == "true"
+    finally:
+        spark.conf.unset(CONSTRAINTS_KEY)
 
 
 def test_unpinned_paths_match_pinned(spark):

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from conftest import job_ids
+
 from joblink_etl_spark.schemas import (
     EXAMPLE_HEADER_ALIASES,
     QUEUE_SCHEMA,
@@ -37,5 +39,16 @@ def test_validate_or_heal_drops_extras(spark):
 
 
 def test_empty_table(spark):
+    """An empty relation Catalyst can see is empty: no Python RDD
+    behind it, so reading it runs no Python task."""
     t = empty_table(spark, QUEUE_SCHEMA)
-    assert t.count() == 0 and t.schema == QUEUE_SCHEMA
+    assert t.schema == QUEUE_SCHEMA
+    assert t._jdf.queryExecution().optimizedPlan().toString().startswith("LocalRelation <empty>")
+    counts = []
+    jobs = job_ids(spark, lambda: counts.append(t.count()), "empty-table-count")
+    tracker = spark.sparkContext.statusTracker()
+    tasks = sum(
+        tracker.getStageInfo(s).numTasks for j in jobs for s in tracker.getJobInfo(j).stageIds
+    )
+    assert counts == [0] and len(jobs) <= 1 and tasks <= 1
+    assert job_ids(spark, lambda: t.filter("status = 'queued'").isEmpty(), "empty-table-isEmpty") == []

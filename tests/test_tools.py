@@ -130,12 +130,17 @@ def test_ab_probe_args():
 
 def test_fetch_probe_runs_every_url_class(spark):
     """tools/fetch_probe.py on a handful of links: every fake URL class
-    goes through the fetch and the drain, the /raise/ link dead-letters."""
+    goes through the fetch and the drain, the /raise/ link dead-letters.
+    --repeat 2 drains the same links twice in the session and reports
+    the second drain as warm."""
     from fetch_probe import parse_args, probe_drain, probe_fetch
 
     from joblink_etl_spark.clients import FakeLlmClient, FakeRendererClient, ThrowingHttpClient
 
-    opts = parse_args(["--fetch-links", "14", "--warm", "1", "--drain-links", "7", "--batch-size", "7"])
+    opts = parse_args(
+        ["--fetch-links", "14", "--warm", "1", "--drain-links", "7", "--batch-size", "7",
+         "--repeat", "2"]
+    )
     clients = (ThrowingHttpClient(), FakeRendererClient(), FakeLlmClient())
     fetch = probe_fetch(spark, opts, clients)
     assert (fetch["links"], len(fetch["warm_s"])) == (14, 1)
@@ -143,8 +148,13 @@ def test_fetch_probe_runs_every_url_class(spark):
     assert (drain["cycles"], drain["batches"]) == (1, {"parse": 1, "notes": 1})
     assert drain["tracker_status"] == {"ok": 6, "error": 1}
     assert drain["python_workers_after"] >= 1
-    with pytest.raises(SystemExit):
-        parse_args(["--fetch-link", "3"])
+    warm = drain["warm"]
+    assert len(warm["drain_s"]) == len(warm["links_per_s"]) == len(warm["codegen_classes"]) == 1
+    assert warm["median_links_per_s"] == warm["links_per_s"][0] > 0
+    assert parse_args([]).repeat == 1
+    for bad in (["--fetch-link", "3"], ["--repeat", "0"]):
+        with pytest.raises(SystemExit):
+            parse_args(bad)
 
 
 def test_staleness_audit_is_green_and_bounded():

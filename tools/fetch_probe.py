@@ -3,7 +3,7 @@ fake links (no download, no network: the fake clients answer from the
 URL alone).
 
     python tools/fetch_probe.py [--fetch-links 10000] [--partitions 4]
-        [--warm 4] [--drain-links 1000] [--batch-size 1000]
+        [--warm 4] [--drain-links 1000] [--batch-size 1000] [--repeat 1]
 
 Prints one JSON line with:
   fetch: ``fetch_smart`` over --fetch-links links in --partitions
@@ -13,7 +13,11 @@ Prints one JSON line with:
          size --batch-size: links/s, drain cycles, Spark jobs and
          seconds per cycle, the whole-stage-codegen classes the drain
          compiled (Spark's CodegenMetrics) and the Python UDF workers
-         alive after it.
+         alive after it; with --repeat N > 1, the same drain runs N
+         times in the session, and ``warm`` gives the seconds, links/s
+         and codegen classes of the N - 1 drains after the first (the
+         warm probe: ``--fetch-links 0 --drain-links 12 --batch-size 12
+         --repeat 5``).
 
 The links cycle through every URL class the fakes know (ATS API,
 direct, thin page, aggregator unwrap, HTTP 500, client error). Before
@@ -58,7 +62,11 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--warm", type=int, default=4, help="timed calls after the first")
     p.add_argument("--drain-links", type=int, default=1_000, help="links in the drained tracker")
     p.add_argument("--batch-size", type=int, default=1_000, help="parse and notes batch size")
-    return p.parse_args(argv)
+    p.add_argument("--repeat", type=int, default=1, help="consecutive drains in the session")
+    opts = p.parse_args(argv)
+    if opts.repeat < 1:
+        p.error("--repeat must be at least 1")
+    return opts
 
 
 def links(spark, n: int, partitions: int):
@@ -133,6 +141,7 @@ def probe_drain(spark, opts, clients) -> dict:
 
     from joblink_etl_spark.operators import pipeline
     from joblink_etl_spark.operators.enqueue import enqueue
+    from joblink_etl_spark.schemas import QUEUE_SCHEMA, empty_table
 
     http, renderer, llm = clients
     blank = {c: F.lit("") for c in ("canonical_link", "company_auto", "role_auto", "status",
@@ -144,10 +153,10 @@ def probe_drain(spark, opts, clients) -> dict:
     )
     queue = enqueue(
         tracker.select("sheet_name", "row_index", F.col("link").alias("url")),
-        spark.createDataFrame([], "sheet_name string, row_index long, status string"),
+        empty_table(spark, QUEUE_SCHEMA),
         now=F.lit(datetime(2024, 1, 1)),
     )
-    kinds: list[str] = []  # the batch kinds the drain ran, in order
+    kinds: list[str] = []  # the batch kinds the last drain ran, in order
     saved = pipeline.parse_batch, pipeline.notes_batch
 
     def counted(kind, fn):
@@ -159,26 +168,30 @@ def probe_drain(spark, opts, clients) -> dict:
 
     pipeline.parse_batch = counted("parse", saved[0])
     pipeline.notes_batch = counted("notes", saved[1])
-    compiled = codegen_compilations(spark)
+    drains = []  # (seconds, jobs, codegen classes) of each drain
     try:
-        secs, jobs, out = timed_jobs(
-            spark, "drain",
-            lambda: pipeline.drain_all(
-                tracker, queue, None, http, renderer, llm, {"one-line hook": "builder"},
-                batch_size=opts.batch_size, notes_batch_size=opts.batch_size,
-                max_cycles=10_000,
-            ),
-        )
+        for k in range(opts.repeat):
+            kinds.clear()
+            compiled = codegen_compilations(spark)
+            secs, jobs, out = timed_jobs(
+                spark, f"drain-{k}",
+                lambda: pipeline.drain_all(
+                    tracker, queue, None, http, renderer, llm, {"one-line hook": "builder"},
+                    batch_size=opts.batch_size, notes_batch_size=opts.batch_size,
+                    max_cycles=10_000,
+                ),
+            )
+            drains.append((secs, jobs, codegen_compilations(spark) - compiled))
     finally:
         pipeline.parse_batch, pipeline.notes_batch = saved
-    compiled = codegen_compilations(spark) - compiled
     workers = python_workers(spark)
     # a cycle runs a parse batch, then a notes batch, each only when its
     # queue holds work: a cycle starts at every batch but a notes batch
     # that follows its cycle's parse batch
     cycles = sum(k == "parse" or prev != "parse" for prev, k in zip([None] + kinds, kinds))
     counts = out["tracker"].groupBy("status").agg(F.count("*").alias("n")).collect()
-    return {
+    secs, jobs, compiled = drains[0]
+    result = {
         "links": opts.drain_links,
         "batch_size": opts.batch_size,
         "links_per_s": round(opts.drain_links / secs, 2),
@@ -192,6 +205,15 @@ def probe_drain(spark, opts, clients) -> dict:
         "python_workers_after": workers,
         "tracker_status": {r["status"]: r["n"] for r in counts},
     }
+    if drains[1:]:
+        warm = [opts.drain_links / s for s, _, _ in drains[1:]]
+        result["warm"] = {
+            "drain_s": [round(s, 3) for s, _, _ in drains[1:]],
+            "links_per_s": [round(r, 2) for r in warm],
+            "median_links_per_s": round(statistics.median(warm), 2),
+            "codegen_classes": [c for _, _, c in drains[1:]],
+        }
+    return result
 
 
 def _identity(batches):
