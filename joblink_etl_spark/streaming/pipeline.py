@@ -20,7 +20,9 @@ row_index) and watermark-bounded when an event-time column exists;
 windowed aggs use update/append with watermarks so state is evicted,
 not grown forever. Every custom stateful fold runs through
 streaming/state.keyed_fold, which hands the fold all of one key's
-rows in the micro-batch as one frame.
+rows in the micro-batch as one frame, or streaming/state.bucket_fold
+(the k-anonymity gate), which hands it all rows of one hash bucket
+of keys and the bucket's table of held key states.
 """
 
 from __future__ import annotations
@@ -42,7 +44,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.predicates import is_valid_url
-from .state import keyed_fold
+from .state import bucket_fold, keyed_fold
 
 LINK_EVENT_SCHEMA = StructType(
     [
@@ -1066,13 +1068,15 @@ def streaming_k_anon_gate(
     of the same class turns releasable), so no released row is ever
     identifiable within a class smaller than k.
 
-    Scale/state design: keyed by the QI tuple (one shuffle); state is
-    ONE long per distinct QI class — exactly the group_n cardinality
-    the batch audit materializes. Skewed QI classes are by definition
-    the privacy-safe ones, and their per-batch work is a vectorized
-    cumulative count. Within a micro-batch rows resolve in id order,
-    so a full-history single-batch drain replays exactly like
-    k_anon_gate_batch — pinned in tests."""
+    Scale/state design: a bucket_fold over the QI tuple (one shuffle,
+    one vectorized Python call per state bucket and micro-batch); the
+    state is, per bucket, a table of the QI classes it has seen and
+    their running counts — in all, one count per distinct QI class,
+    exactly the group_n cardinality the batch audit materializes,
+    which the binning of the QI columns bounds. A floating-point QI
+    column is a ValueError (bin it first). Within a micro-batch rows
+    resolve in id order, so a full-history single-batch drain replays
+    exactly like k_anon_gate_batch — pinned in tests."""
     qi_cols = list(qi_cols)
     cols = qi_cols + [id_col]
     base = rows.select(*cols)
@@ -1085,15 +1089,22 @@ def streaming_k_anon_gate(
     )
     state_schema = StructType([StructField("class_n", LongType())])
 
-    def count_class(key, pdf, state):
-        (n,) = state
-        pdf = pdf.sort_values(id_col).copy()
-        running = list(range(n + 1, n + 1 + len(pdf)))
-        pdf["class_n"] = running
-        pdf["releasable"] = [c >= k for c in running]
-        return (int(n + len(pdf)),), pdf[cols + ["class_n", "releasable"]]
+    def count_classes(pdf, held):
+        import pandas as pd  # noqa: PLC0415 — executor-side import
 
-    return keyed_fold(base, qi_cols, out_schema, state_schema, (0,), count_class)
+        # the held counts stacked ahead of the batch's rows in id
+        # order: a class's running sum at a row is its size at arrival
+        batch = pdf.sort_values(id_col, kind="stable", ignore_index=True)
+        arrived = batch[qi_cols].assign(class_n=1)
+        stacked = pd.concat([held, arrived], ignore_index=True) if len(held) else arrived
+        by_class = stacked.groupby(qi_cols, dropna=False, sort=False)
+        running = by_class["class_n"].cumsum()
+        class_n = running.to_numpy()[len(held):]
+        last = by_class.cumcount(ascending=False).to_numpy() == 0
+        new_held = stacked[last].assign(class_n=running[last])
+        return new_held, batch[cols].assign(class_n=class_n, releasable=class_n >= k)
+
+    return bucket_fold(base, qi_cols, out_schema, state_schema, count_classes)
 
 
 def k_anon_gate_batch(

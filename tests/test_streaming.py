@@ -949,6 +949,63 @@ def test_streaming_k_anon_gate_state_across_batches(spark, tmp_path):
     assert got == want
 
 
+def _k_anon_qi_case(kind):
+    """(schema, QI columns, rows of the first micro-batch, rows) of a
+    twin case: one row of every QI class in the first micro-batch, the
+    rest in the second, so every class crosses k=2 only through its
+    held count."""
+    from datetime import date
+
+    if kind == "null_string_long":
+        # NULLs in a string and in a long QI, alone and together; a
+        # long column with NULLs reaches pandas as float64
+        classes = [("A", 30), (None, 30), ("A", None), (None, None), ("B", 40)]
+        rows = [(i, *classes[i % 5]) for i in range(15)]
+        return "event_id long, zip string, age long", ["zip", "age"], 5, rows
+    ts = [datetime(2024, 3, 10, 1, 30), datetime(2024, 7, 1, 12, 0, 0, 123456), None]
+    rows = [(i, ts[i % 3], [date(2024, 1, 1), None][i % 2], [True, None][i % 2])
+            for i in range(18)]
+    return "event_id long, t timestamp, d date, b boolean", ["t", "d", "b"], 6, rows
+
+
+@pytest.mark.parametrize("kind", ["null_string_long", "temporal_boolean"])
+def test_streaming_k_anon_gate_qi_key_types(spark, tmp_path, kind):
+    """QI keys with NULLs go through the state bucket's held table and
+    back over two micro-batches: each NULL combination is one class, as
+    in Spark's grouping, and the sink equals the batch twin row for
+    row, every class reaching a size of 3."""
+    from joblink_etl_spark.streaming.pipeline import (
+        k_anon_gate_batch,
+        run_available_now,
+        streaming_k_anon_gate,
+    )
+
+    src, sink, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
+    schema, qi, first, rows = _k_anon_qi_case(kind)
+    for part in (rows[:first], rows[first:]):
+        spark.createDataFrame(part, schema).write.mode("append").parquet(src)
+        run_available_now(
+            streaming_k_anon_gate(spark.readStream.schema(schema).parquet(src), qi, k=2),
+            sink, ckpt,
+        )
+    got = sorted(map(tuple, spark.read.parquet(sink).select(
+        *qi, "event_id", "class_n", "releasable").collect()), key=repr)
+    want = sorted(map(tuple, k_anon_gate_batch(
+        spark.read.parquet(src), qi, k=2).collect()), key=repr)
+    assert got == want
+    assert {r[len(qi) + 1] for r in got} == {1, 2, 3}
+
+
+def test_streaming_k_anon_gate_rejects_float_qi(spark):
+    """Spark groups a floating-point NaN apart from NULL, pandas does
+    not: a float QI column is refused when the gate is built."""
+    from joblink_etl_spark.streaming.pipeline import streaming_k_anon_gate
+
+    rows = spark.createDataFrame([(1, "A", 1.5)], "event_id long, zip string, score double")
+    with pytest.raises(ValueError, match="'score'"):
+        streaming_k_anon_gate(rows, ["zip", "score"], k=2)
+
+
 def test_streaming_blocklist_gate_matches_batch(spark, tmp_path):
     """The scan-side blocklist gate matches the join-based batch
     operator row-for-row on an availableNow drain, including the

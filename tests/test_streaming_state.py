@@ -1,6 +1,7 @@
-"""The keyed-state primitive (streaming/state.py) without Spark: its
-per-key function driven through a fake GroupState, and an AST guard
-that no other package module reaches the state API directly."""
+"""The keyed-state primitives (streaming/state.py) without Spark: the
+per-key and per-bucket functions driven through a fake GroupState,
+an AST guard that no other package module reaches the state API
+directly, and (with Spark) the pinned layout of the state buckets."""
 
 from __future__ import annotations
 
@@ -9,9 +10,17 @@ from pathlib import Path
 
 import pandas as pd
 import pytest
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 import joblink_etl_spark
-from joblink_etl_spark.streaming.state import fold_key
+from joblink_etl_spark.streaming.state import (
+    BUCKET_COL,
+    STATE_BUCKETS,
+    fold_bucket,
+    fold_key,
+    held_table_schema,
+    state_bucket,
+)
 
 
 class FakeState:
@@ -135,6 +144,80 @@ def test_fold_key_timed_out_key_expires_then_removes(emitted):
     assert st.removed and not st.exists
     assert st.deadlines == []
     assert [o.to_dict("list") for o in out] == ([] if emitted is None else [emitted])
+
+
+KEYS = [StructField("g", StringType()), StructField("h", LongType())]
+HELD = held_table_schema(KEYS, StructType([StructField("n", LongType())]))
+
+
+def bucket_rows(*rows):
+    """One bucket's rows as Spark hands them: the key columns, a value
+    and the bucket column."""
+    return iter([pd.DataFrame(rows, columns=["g", "h", "v"]).assign(**{BUCKET_COL: 5})])
+
+
+def count_keys(calls):
+    """A per-key row count as a bucket step; records the held table it
+    got and emits each row with its key's count after it."""
+
+    def step(pdf, held):
+        calls.append(held.copy())
+        new = pdf[["g", "h"]].assign(n=1)
+        stacked = pd.concat([held, new], ignore_index=True) if len(held) else new
+        by_key = stacked.groupby(["g", "h"], dropna=False, sort=False)
+        running = by_key["n"].cumsum()
+        last = by_key.cumcount(ascending=False).to_numpy() == 0
+        return stacked[last].assign(n=running[last]), pdf.assign(n=running.to_numpy()[len(held):])
+
+    return step
+
+
+def held_rows(st):
+    return sorted(zip(*st.get), key=repr)
+
+
+def test_fold_bucket_from_empty_state_then_carried():
+    calls, st = [], FakeState()
+    (out1,) = fold_bucket(bucket_rows(("a", 1, 0), ("a", 1, 1), ("b", None, 2)), st, HELD,
+                          count_keys(calls))
+    # a new bucket's held table is empty but typed
+    assert len(calls[0]) == 0 and list(calls[0].columns) == ["g", "h", "n"]
+    assert calls[0]["h"].dtype == "int64" and calls[0]["n"].dtype == "int64"
+    # written back as the table's types: a NULL long is None, not NaN
+    assert held_rows(st) == [("a", 1, 2), ("b", None, 1)]
+    assert all(type(v) is int for v in st.get[2])
+
+    (out2,) = fold_bucket(bucket_rows(("b", None, 3), ("c", 7, 4)), st, HELD, count_keys(calls))
+    # the held counts carry into the next micro-batch, the long key
+    # with a NULL typed as pyspark types it (float64)
+    assert calls[1]["h"].dtype == "float64"
+    assert out2["n"].tolist() == [2, 1]
+    # "a" is absent from this batch and keeps its row
+    assert held_rows(st) == [("a", 1, 2), ("b", None, 2), ("c", 7, 1)]
+    # one frame per call, without the bucket column
+    for out in (out1, out2):
+        assert BUCKET_COL not in out.columns
+    assert out1["n"].tolist() == [1, 2, 1]
+
+
+def test_fold_bucket_out_none_still_writes_state():
+    st = FakeState()
+    got = list(fold_bucket(bucket_rows(("a", 1, 0)), st, HELD,
+                           lambda pdf, held: (pdf[["g", "h"]].assign(n=4), None)))
+    assert got == [] and held_rows(st) == [("a", 1, 4)]
+
+
+def test_state_bucket_layout_is_pinned(spark):
+    """bucket_fold's state layout is part of the checkpoint format: a
+    changed count or hash moves keys to buckets whose state does not
+    hold them, which resets their counts on restart (the k-anonymity
+    gate would then release rows below k) and which Spark's
+    state-schema check cannot see."""
+    assert STATE_BUCKETS == 64
+    rows = [("signup", 0, 0), ("view", 13, 4), ("error", None, 56), (None, 23, None)]
+    df = spark.createDataFrame(rows, "event_type string, hour long, value_bin long")
+    got = [r[0] for r in df.select(state_bucket("event_type", "hour", "value_bin")).collect()]
+    assert got == [11, 45, 57, 39]
 
 
 STATE_API = {

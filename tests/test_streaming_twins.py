@@ -11,7 +11,7 @@ bit-identical to its batch twin over the full history.
 Per-operator quirks (how "the final answer" is read off an
 append-mode sink) live inside that operator's runner; the
 enumeration, the corpus discipline, and the completeness guard are
-shared. The guard finds pipeline.py's keyed_fold /
+shared. The guard finds pipeline.py's keyed_fold / bucket_fold /
 dropDuplicatesWithinWatermark callers through the AST, so a NEW
 stateful operator cannot ship without registering a runner here (or
 an explicit, reasoned exclusion).
@@ -733,8 +733,9 @@ TWINS = {
 }
 
 
-# the 14 keyed_fold operators and the dropDuplicatesWithinWatermark
-# enqueue; a new stateful operator joins this set and TWINS together
+# the 13 keyed_fold operators, the bucket_fold k-anonymity gate and
+# the dropDuplicatesWithinWatermark enqueue; a new stateful operator
+# joins this set and TWINS together
 STATEFUL_OPERATORS = {
     "streaming_enqueue",
     "throttled_links",
@@ -773,7 +774,7 @@ def test_every_stateful_operator_has_a_twin_runner():
         if not isinstance(node, ast.Call):
             return False
         f = node.func
-        return (isinstance(f, ast.Name) and f.id == "keyed_fold") or (
+        return (isinstance(f, ast.Name) and f.id in ("keyed_fold", "bucket_fold")) or (
             isinstance(f, ast.Attribute) and f.attr == "dropDuplicatesWithinWatermark"
         )
 

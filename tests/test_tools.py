@@ -157,6 +157,32 @@ def test_fetch_probe_runs_every_url_class(spark):
             parse_args(bad)
 
 
+def test_stream_probe_drains_the_k_anon_gate(spark, tmp_path):
+    """tools/stream_probe.py on a small event table: two drains in the
+    session, each of the benchmark's two source files as one
+    micro-batch with its addBatch time and state size; a narrower
+    value bin makes more QI classes."""
+    from stream_probe import parse_args, probe
+
+    from joblink_etl_spark.streaming.state import STATE_BUCKETS
+
+    opts = parse_args(["--rows", "2000", "--repeat", "2"])
+    out = probe(spark, opts, str(tmp_path / "a"))
+    assert out["rows"] == 2000 and 0 < out["classes"] <= 2000
+    assert len(out["drains"]) == 2 and set(out["warm"]) == {"median_s"}
+    for d in out["drains"]:
+        assert sum(b["rows"] for b in d["batches"]) == 2000
+        assert len(d["batches"]) == 2 and d["rows_per_s"] > 0
+        for b in d["batches"]:
+            assert b["add_batch_ms"] > 0 and 0 < b["state_rows"] <= STATE_BUCKETS
+            assert b["state_bytes"] > 0
+    fine = probe(spark, parse_args(["--rows", "2000", "--value-bin", "1"]), str(tmp_path / "b"))
+    assert fine["classes"] > out["classes"] and "warm" not in fine
+    for bad in (["--rows", "0"], ["--value-bin", "0"], ["--repeat", "0"], ["--row", "5"]):
+        with pytest.raises(SystemExit):
+            parse_args(bad)
+
+
 def test_staleness_audit_is_green_and_bounded():
     """The rotation policy's auditability contract (r11 verdict item
     2): tools/staleness_check.py derives every query's latest
