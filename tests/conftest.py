@@ -27,6 +27,7 @@ SLOW_TESTS = frozenset(
     {
         "test_all_queries_run_small",            # 425 s: all-252 execution sweep
         "test_builders_run_no_action_at_construction",  # 183 s: all-252 plan builds
+        "test_plan_census_is_current",           # shares that census build
         "test_drain_all_full_lifecycle",         # 99 s: full fetch-pipeline drain
         "test_spearman_bounded_and_self_correlated",    # 99 s: hypothesis loop
         "test_driver_window_queries_emit_only_hashable_scalars",  # 58 s
@@ -83,6 +84,24 @@ def spark():
 
     s = get_spark("tests", master="local[4]", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(scope="session")
+def registry_census(spark):
+    """tools/plan_census.py's census of every registered plan at sf0.001,
+    built once per session; a build error fails every test using it."""
+    import sys
+
+    sys.path.insert(0, str(Path(__file__).parent.parent / "tools"))
+    from plan_census import census
+
+    from joblink_etl_spark.plans import registry
+
+    recs = census(spark, SF_SMALL, registry.queries())
+    errors = {n: r["error"] for n, r in recs.items() if "error" in r}
+    if errors:
+        raise RuntimeError(f"plan builds failed: {errors}")
+    return recs
 
 
 @pytest.fixture(scope="session")

@@ -8,7 +8,6 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
-from conftest import job_ids
 from pyspark.sql import functions as F
 
 from joblink_etl_spark.plans import relational as R
@@ -279,23 +278,16 @@ CONSTRUCTION_JOB_EXEMPT = frozenset(
 )
 
 
-def test_builders_run_no_action_at_construction(spark):
+def test_builders_run_no_action_at_construction(registry_census):
     """Plan construction must be action-free — no eager count(), no
     localCheckpoint (eager under AQE even with eager=False): at scale
     a construction-time action is an unrequested full corpus pass per
-    query build. Builds EVERY registered plan in its own job group and
-    asserts the set that ran construction-time jobs equals the
+    query build. The census builds EVERY registered plan in its own job
+    group; the set that ran construction-time jobs must equal the
     enumerated CONSTRUCTION_JOB_EXEMPT list exactly — both directions:
     a new pin must be reviewed onto the list, and a retired pin must
     be removed from it."""
-    from joblink_etl_spark.plans import registry
-
-    sf = "/root/testdata/sf0.001"
-    triggered = set()
-    for name, fn in registry.queries().items():
-        if job_ids(spark, lambda: fn(spark, sf), f"plan-build-lazy-check-{name}"):
-            triggered.add(name)
-        spark.catalog.clearCache()
+    triggered = {n for n, r in registry_census.items() if r["counts"]["build_jobs"]}
     unexpected = triggered - CONSTRUCTION_JOB_EXEMPT
     stale = CONSTRUCTION_JOB_EXEMPT - triggered
     assert not unexpected, (
@@ -314,6 +306,32 @@ def test_builders_run_no_action_at_construction(spark):
         "(environment-sensitive — see docstring); verify which before "
         "editing the list."
     )
+
+
+def test_plan_census_is_current(registry_census):
+    """PLAN_CENSUS.json (node counts, construction jobs, global windows
+    and generate-class broadcasts per query at sf0.001) is the committed
+    plan shape of every registered query: a change that alters a plan
+    regenerates it (`python tools/plan_census.py census`), so the diff
+    shows in review."""
+    import json
+    import os
+
+    import joblink_etl_spark
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(joblink_etl_spark.__file__)))
+    with open(os.path.join(repo, "PLAN_CENSUS.json")) as f:
+        committed = json.load(f)
+    current = {n: r["counts"] for n, r in registry_census.items()}
+    diffs = []
+    for name in sorted(set(committed) | set(current)):
+        old, new = committed.get(name, {}), current.get(name, {})
+        diffs += [
+            f"{name}.{key}: {old.get(key, 0)} -> {new.get(key, 0)}"
+            for key in sorted(set(old) | set(new))
+            if old.get(key, 0) != new.get(key, 0)
+        ]
+    assert not diffs, "plan census changed; regenerate PLAN_CENSUS.json:\n" + "\n".join(diffs)
 
 
 def test_dynamic_partition_pruning_fires_on_partitioned_fact(spark, tmp_path):
@@ -499,7 +517,7 @@ def test_exempt_disposition_table_covers_exempt_set():
         os.path.dirname(os.path.abspath(joblink_etl_spark.__file__))
     )
     sys.path.insert(0, os.path.join(repo, "tools"))
-    from broadcast_audit import EXEMPT_BOUNDS, exempt_dispositions
+    from plan_census import EXEMPT_BOUNDS, exempt_dispositions
 
     disp = exempt_dispositions(CONSTRUCTION_JOB_EXEMPT)
     assert set(disp) == set(CONSTRUCTION_JOB_EXEMPT)

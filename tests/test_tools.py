@@ -1,17 +1,17 @@
-"""Tests for the audit tools themselves (tools/broadcast_audit.py).
+"""Tests for the audit tools themselves (tools/plan_census.py and the
+argument parsing of the probes).
 
-r14 switched the scan from 'simple' to 'formatted' explain mode so
-subquery plan trees (`===== Subqueries =====` sections) are scanned
-under one explicit, version-independent grammar — the r12 verdict's
-documented caveat was that subquery plans might escape the
-structural scan. (Empirically, Spark 4.1.2's simple mode ALSO
-inlines subquery subtrees as innerChildren, so both modes cover
+The broadcast scan reads the 'formatted' explain string so subquery
+plan trees (`===== Subqueries =====` sections) are scanned under one
+explicit, version-independent grammar. (Spark 4.1.2's simple mode
+also inlines subquery subtrees as innerChildren, so both modes cover
 them on this version; formatted makes the coverage explicit and
 uniform.) These tests pin: (a) a synthetic generate-class broadcast
 living inside a scalar subquery is caught in the formatted scan,
 (b) the operator-detail sections of formatted output produce no
 phantom matches, (c) the designed quadratic-guard refusal is
-classified as such, not as an audit error.
+classified as such, not as an audit error, (d) the census's node,
+global-window and construction-job counts on synthetic plans.
 """
 
 from __future__ import annotations
@@ -22,14 +22,19 @@ import sys
 import pytest
 
 import joblink_etl_spark
+from conftest import SF_SMALL
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(joblink_etl_spark.__file__)))
 sys.path.insert(0, os.path.join(_REPO, "tools"))
 
-from broadcast_audit import (  # noqa: E402
+from plan_census import (  # noqa: E402
+    CENSUS_PATH,
     WHITELIST,
     _is_guard_refusal,
+    census,
     generate_class_broadcasts,
+    parse_args as census_args,
+    run_broadcasts,
 )
 
 
@@ -106,6 +111,94 @@ def test_guard_refusal_classifier():
     assert not _is_guard_refusal(RuntimeError("allow_quadratic mentioned"))
 
 
+def test_census_counts_synthetic_plan_shapes(spark):
+    """census() on synthetic plans built once each: a global ordered
+    window is counted and a partitioned one is not; a crossJoin with
+    auto-broadcast off plans a CartesianProduct; first() over a string
+    column demotes the aggregate to SortAggregate nodes; no builder
+    here runs a job at construction."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    base = spark.range(100).selectExpr("id", "id % 7 AS k", "cast(id AS string) AS s")
+    shapes = {
+        "global": lambda s, d: base.withColumn("r", F.row_number().over(Window.orderBy("id"))),
+        "partitioned": lambda s, d: base.withColumn(
+            "r", F.row_number().over(Window.partitionBy("k").orderBy("id"))
+        ),
+        "cross": lambda s, d: base.crossJoin(spark.range(5).withColumnRenamed("id", "j")),
+        "first_string": lambda s, d: base.groupBy("k").agg(F.first("s")),
+    }
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        c = {n: r["counts"] for n, r in census(spark, None, shapes).items()}
+    finally:
+        spark.conf.set(key, old)
+    assert (c["global"]["global_windows"], c["global"]["Window"]) == (1, 1)
+    assert (c["partitioned"]["global_windows"], c["partitioned"]["Window"]) == (0, 1)
+    assert c["cross"]["CartesianProduct"] == 1 and "CartesianProduct" not in c["global"]
+    assert c["first_string"]["SortAggregate"] == 2 and "HashAggregate" not in c["first_string"]
+    assert {r["build_jobs"] for r in c.values()} == {0}
+
+
+def test_census_builds_each_query_once_and_records_errors(spark):
+    """census() calls each builder exactly once; a builder that raises
+    is recorded as an error and the census goes on to the next query."""
+    calls = []
+
+    def broken(s, d):
+        calls.append("broken")
+        raise ValueError("no such table")
+
+    def ok(s, d):
+        calls.append("ok")
+        return s.range(3)
+
+    recs = census(spark, "/sf", {"broken": broken, "ok": ok})
+    assert calls == ["broken", "ok"]
+    assert str(recs["broken"]["error"]) == "no such table"
+    assert recs["ok"]["counts"]["Range"] == 1
+
+
+def test_plan_census_covers_the_registry():
+    """The committed PLAN_CENSUS.json has exactly one entry per
+    registered query (no planning needed)."""
+    import json
+
+    from joblink_etl_spark.plans import registry
+
+    with open(CENSUS_PATH) as f:
+        assert set(json.load(f)) == set(registry.queries())
+
+
+def test_missing_exempt_list_fails_loudly(monkeypatch):
+    """The broadcast audit must not fall back to an empty exempt set
+    when CONSTRUCTION_JOB_EXEMPT cannot be imported: the standing scan
+    would then build every exempt query (running its construction jobs
+    at corpus scale) and --exempt-audit would audit nothing and pass."""
+    monkeypatch.setitem(sys.modules, "test_plans", None)
+    for argv in (["broadcasts"], ["broadcasts", "--exempt-audit"]):
+        with pytest.raises(ImportError):
+            run_broadcasts(None, census_args(argv), {})
+
+
+def test_plan_census_args():
+    """tools/plan_census.py: census defaults to sf0.001 and every query,
+    broadcasts to the x100 replica and a derived round; a flag missing
+    its value or an unknown subcommand is a usage error."""
+    a = census_args(["census", "--dump", "/d", "/sf", "q1", "q2"])
+    assert (a.cmd, a.sf_dir, a.queries, a.dump) == ("census", "/sf", ["q1", "q2"], "/d")
+    assert (census_args(["census"]).sf_dir, census_args(["census"]).queries) == (SF_SMALL, [])
+    b = census_args(["broadcasts", "--exempt-audit", "--round", "7"])
+    assert (b.exempt_audit, b.round, b.sf_dir.endswith("sf1x100p")) == (True, 7, True)
+    assert isinstance(census_args(["broadcasts"]).round, int)
+    for bad in (["census", "--dump"], ["broadcasts", "--round"], ["broadcasts", "--exempt"], ["plans"], []):
+        with pytest.raises(SystemExit):
+            census_args(bad)
+
+
 def test_whitelist_entries_still_registered():
     from joblink_etl_spark.plans import registry
 
@@ -124,6 +217,20 @@ def test_ab_probe_args():
     assert (a.sf_dir, a.queries, a.n, a.ref) == ("/sf", ["q1", "q2"], 5, "HEAD~1")
     assert (parse_args(["/sf", "q"]).n, parse_args(["/sf", "q"]).ref) == (3, "HEAD")
     for bad in (["/sf", "q", "--n"], ["/sf", "q", "--ref"], ["/sf", "q", "--nx", "2"], ["/sf"], []):
+        with pytest.raises(SystemExit):
+            parse_args(bad)
+
+
+def test_solo_time_args():
+    """tools/solo_time.py: a trailing --n, an unknown flag that merely
+    starts with --n, a non-positive --n or a missing sf_dir / query is a
+    usage error, not an IndexError or a flag read as another."""
+    from solo_time import parse_args
+
+    a = parse_args(["/sf", "q1", "q2", "--n", "5"])
+    assert (a.sf_dir, a.queries, a.n) == ("/sf", ["q1", "q2"], 5)
+    assert (parse_args(["/sf", "q", "--n=2"]).n, parse_args(["/sf", "q"]).n) == (2, 3)
+    for bad in (["/sf", "q", "--n"], ["/sf", "q", "--nx", "2"], ["/sf", "q", "--n", "0"], ["/sf"], []):
         with pytest.raises(SystemExit):
             parse_args(bad)
 
@@ -220,7 +327,7 @@ def test_staleness_audit_is_green_and_bounded():
 
 
 def test_broadcast_audit_fixed_queries_stay_clean(spark):
-    """Fast regression slice of tools/broadcast_audit.py: the three
+    """Fast regression slice of `tools/plan_census.py broadcasts`: the three
     queries whose misestimated corpus-scale broadcasts the r12 x100
     audit caught (incremental substring dedup's gram index,
     nb_classify's exploded feature re-join, interval_join's exploded
@@ -239,10 +346,10 @@ def test_broadcast_audit_fixed_queries_stay_clean(spark):
         os.path.dirname(os.path.abspath(joblink_etl_spark.__file__))
     )
     sys.path.insert(0, os.path.join(repo, "tools"))
-    from broadcast_audit import WHITELIST, generate_class_broadcasts
+    from plan_census import WHITELIST, generate_class_broadcasts
 
-    # formatted: the mode the tool itself scans since r14 (it also
-    # prints subquery plan trees — see tests/test_tools.py)
+    # formatted: the mode the tool itself scans (it also prints
+    # subquery plan trees — see the subquery test above)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )

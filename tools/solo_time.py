@@ -11,6 +11,7 @@ tail contention.
 
 from __future__ import annotations
 
+import argparse
 import statistics
 import sys
 import time
@@ -18,23 +19,20 @@ import time
 sys.path.insert(0, ".")
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    p = argparse.ArgumentParser(description="Solo-warm timing of registered queries.", allow_abbrev=False)
+    p.add_argument("sf_dir", help="directory of the parquet tables at one scale factor")
+    p.add_argument("queries", nargs="+", help="registered query names")
+    p.add_argument("--n", type=int, default=3, help="timed runs per query after one warm run")
+    opts = p.parse_args(argv)
+    if opts.n < 1:
+        p.error("--n must be at least 1")
+    return opts
+
+
 def main() -> None:
-    # both `--n=3` and `--n 3` are accepted; the value token after a
-    # space-separated `--n` must NOT fall through into the query list
-    args, n, skip = [], 3, False
-    for i, a in enumerate(sys.argv[1:], start=1):
-        if skip:
-            skip = False
-            continue
-        if a.startswith("--n"):
-            if "=" in a:
-                n = int(a.split("=")[1])
-            else:
-                n = int(sys.argv[i + 1])
-                skip = True
-        elif not a.startswith("--"):
-            args.append(a)
-    sf_dir, names = args[0], args[1:]
+    opts = parse_args()
+    sf_dir, names, n = opts.sf_dir, opts.queries, opts.n
 
     from joblink_etl_spark.plans import registry
     from joblink_etl_spark.session import get_spark
