@@ -141,9 +141,9 @@ def parse_batch(
             F.lit("").alias("last_error"),
         )
     )
-    new_queue = dequeue(
-        queue, parsed.select(*QUEUE_KEY).unionByName(err_rows.select(*QUEUE_KEY))
-    )
+    # every batch item leaves the queue (reference :924): parsed,
+    # dead-lettered, and a row without a URL, which fetch_smart drops
+    new_queue = dequeue(queue, batch.select(*QUEUE_KEY))
     return {
         "tracker": new_tracker,
         "queue": new_queue,

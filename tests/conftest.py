@@ -65,19 +65,6 @@ def pytest_collection_modifyitems(config, items):
             raise pytest.UsageError(f"SLOW_TESTS entries match no collected test: {stale}")
 
 
-def job_ids(spark, fn, group: str) -> list[int]:
-    """Run ``fn()`` under Spark job group ``group`` and return the ids
-    of the jobs the scheduler ran for it."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.fixture(scope="session")
 def spark():
     from joblink_etl_spark.session import get_spark

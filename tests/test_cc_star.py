@@ -3,7 +3,7 @@ identical components on the shapes that stress each algorithm."""
 
 from __future__ import annotations
 
-from conftest import job_ids
+from joblink_etl_spark.profile import job_ids
 
 from joblink_etl_spark.operators import dedup as D
 

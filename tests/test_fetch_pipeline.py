@@ -478,3 +478,30 @@ def test_drain_all_reads_the_callers_queue_once(spark):
     out = drain_all(tracker, queue, None, HTTP, RENDERER, LLM, {"one-line hook": "builder"})
     assert acc.value == 1
     assert [r["status"] for r in out["tracker"].collect()] == ["ok"]
+
+
+def test_drain_all_dequeues_a_row_without_url(spark, monkeypatch):
+    """fetch_smart drops a row without a URL (nothing to fetch), so it
+    is neither parsed nor dead-lettered; it must still leave the queue
+    in the cycle that selected it, with its tracker row untouched."""
+    from joblink_etl_spark.operators import pipeline
+
+    calls = []
+
+    def counted(*a, **k):
+        calls.append(1)
+        return parse_batch(*a, **k)
+
+    monkeypatch.setattr(pipeline, "parse_batch", counted)
+    tracker = _tracker(spark, [("S", 2, None, "", "", "", "", "", "", "")])
+    queue = spark.createDataFrame(
+        [("S", 2, None, "queued", 0, datetime(2024, 1, 1), "", "")],
+        "sheet_name string, row_index long, url string, status string, tries int,"
+        "enqueued_at timestamp, next_attempt_at string, last_error string",
+    )
+    out = pipeline.drain_all(
+        tracker, queue, None, HTTP, RENDERER, LLM, {"one-line hook": "builder"}, max_cycles=3
+    )
+    assert out["queue"].count() == 0
+    assert len(calls) == 1
+    assert [(r["status"], r["source"]) for r in out["tracker"].collect()] == [("", "")]

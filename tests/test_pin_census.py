@@ -9,10 +9,10 @@ import ast
 import os
 
 import pytest
-from conftest import job_ids
 
 import joblink_etl_spark
 from joblink_etl_spark.pin import CONSTRAINTS_KEY, SCALES, pin
+from joblink_etl_spark.profile import job_ids
 
 PKG_ROOT = os.path.dirname(os.path.abspath(joblink_etl_spark.__file__))
 

@@ -14,8 +14,9 @@ from __future__ import annotations
 import itertools
 
 import pytest
-from conftest import job_ids
 from pyspark.sql import types as T
+
+from joblink_etl_spark.profile import job_ids
 
 # The driver hashes the FIRST 50 registered queries (catalog.py
 # ordering). Keep in sync with the window size documented there.
@@ -91,7 +92,7 @@ def test_bench_output_line_is_driver_parseable(tmp_path):
 
     timings = {f"query_{i:03d}_with_a_long_name": round(0.1 * i, 3) for i in range(200)}
     detail = tmp_path / "BENCH_DETAIL.json"
-    line = bench.format_output(timings, 0.1, str(detail))
+    line = bench.format_output({n: {"sec": s} for n, s in timings.items()}, 0.1, str(detail))
     assert len(line) <= 2000
     parsed = json.loads(line)
     assert parsed["n_queries"] == 200
@@ -103,6 +104,23 @@ def test_bench_output_line_is_driver_parseable(tmp_path):
     full = json.loads(detail.read_text())
     assert full["queries"] == timings
     assert parsed["detail_file"] == "BENCH_DETAIL.json"
+
+    # the registry's real names, longest slowest and every time in the
+    # widest format: the line still lists at least 25 raw slowest-K
+    from joblink_etl_spark.plans import registry
+
+    names = sorted(
+        (n for n in registry.queries() if n not in bench.EXCLUDED_QUADRATIC_BASELINES),
+        key=len,
+        reverse=True,
+    )
+    records = {n: {"sec": round(999.999 - 0.011 * i, 3)} for i, n in enumerate(names)}
+    line = bench.format_output(records, 0.1, str(detail))
+    assert len(line) <= 2000
+    inline = json.loads(line)["queries"]
+    assert len(inline) >= 25
+    assert list(inline) == names[: len(inline)]
+    assert json.loads(detail.read_text())["records"] == records
 
 
 def test_line_dedup_drops_planted_boilerplate(spark, sf_dir):
@@ -529,128 +547,6 @@ def test_packing_contamination_invariants(spark):
     assert sum(r["n_splits"] for r in out) >= 2
 
 
-def test_bench_reprobe_selection_and_output(tmp_path):
-    """The in-run burst guard (r10 verdict item 2) must flag exactly
-    the >2x-and->0.5s-gap outliers vs the trailing round, worst first,
-    capped — and the detail file must carry both numbers plus a
-    burst-free adjusted total next to the raw one."""
-    import json
-
-    import bench
-
-    prior = {"a": 1.0, "b": 4.0, "c": 0.1, "d": 2.0, "e": 3.0}
-    timings = {
-        "a": 2.6,   # 2.6x and +1.6s -> flagged
-        "b": 9.0,   # 2.25x and +5s  -> flagged
-        "c": 0.25,  # 2.5x but gap 0.15s < 0.5 -> NOT flagged (noise)
-        "d": 3.9,   # 1.95x -> NOT flagged (under ratio)
-        "e": 3.1,   # ~1x -> NOT flagged
-        "new": 9.9,  # no trailing-round entry -> cannot flag
-    }
-    sel = bench.select_reprobes(timings, prior)
-    assert sel == ["a", "b"]  # 2.6x before 2.25x
-    # cap honored
-    many = {f"q{i}": 10.0 for i in range(bench.REPROBE_MAX + 5)}
-    assert len(bench.select_reprobes(many, {k: 1.0 for k in many})) == bench.REPROBE_MAX
-
-    detail = tmp_path / "BENCH_DETAIL.json"
-    reprobes = {"b": {"in_run": 9.0, "reprobe": 4.2, "prior": 4.0}}
-    line = bench.format_output(
-        timings, 0.1, str(detail), reprobes=reprobes, baseline_source="committed"
-    )
-    parsed = json.loads(line)
-    assert parsed["n_reprobed"] == 1
-    assert parsed["baseline_source"] == "committed"
-    # adjusted total substitutes best-of(in_run, reprobe) for b only
-    assert parsed["reprobe_adjusted_total"] == round(
-        sum(timings.values()) - 9.0 + 4.2, 3
-    )
-    # adjudicated per-query values ride the ONE-LINE JSON too (r14
-    # verdict item 4): the driver's PERF comparison reads only the
-    # line, so reprobed queries expose min(in_run, reprobe) inline
-    assert parsed["queries_adjudicated"] == {"b": 4.2}
-    # ...but the raw inline `queries` map stays raw (cross-round
-    # comparable with prior rounds' lines)
-    assert parsed["queries"]["b"] == 9.0
-    full = json.loads(detail.read_text())
-    assert full["reprobes"] == reprobes
-    # the PERSISTED map (next round's guard baseline) carries the
-    # adjudicated min(in_run, reprobe) for re-probed queries — NOT the
-    # inflated burst, which would ratchet the baseline upward so a
-    # future real regression to the burst level never flags (VERDICT
-    # r11 "What's wrong" #1: scene_cuts committed at 2.096 s with a
-    # 0.727 s re-probe on record).
-    assert full["queries"]["b"] == 4.2
-    assert {k: v for k, v in full["queries"].items() if k != "b"} == {
-        k: v for k, v in timings.items() if k != "b"
-    }
-    # the headline value stays the raw in-run total (cross-round comparable)
-    assert parsed["value"] == round(sum(timings.values()), 3)
-
-
-def test_bench_prior_reads_committed_detail(tmp_path):
-    """The re-probe guard's trailing-round reference must come from
-    the COMMITTED BENCH_DETAIL.json (git show HEAD:./...), not the
-    working-tree file bench itself overwrites every run — otherwise
-    the second attempt of a multi-attempt session compares against
-    the first attempt instead of the last round's artifact.
-
-    Hardened per ADVICE r11: repo path derived from bench.__file__
-    (not hardcoded), skip with a clear message when there is no
-    committed blob (sdist / CI without git history), and prove the
-    committed source is actually PREFERRED by dirtying the
-    working-tree file and checking load_prior ignores it.
-    """
-    import json
-    import os
-    import subprocess
-
-    import bench
-    import pytest
-
-    repo = os.path.dirname(os.path.abspath(bench.__file__))
-    detail_path = os.path.join(repo, "BENCH_DETAIL.json")
-    blob = subprocess.run(
-        ["git", "show", "HEAD:./BENCH_DETAIL.json"],
-        cwd=repo,
-        capture_output=True,
-        text=True,
-    )
-    if blob.returncode != 0:
-        pytest.skip("no committed BENCH_DETAIL.json (not a git checkout)")
-    committed = json.loads(blob.stdout)["queries"]
-
-    prior, source = bench.load_prior(detail_path)
-    assert source == "committed"
-    assert prior == committed
-    assert len(prior) > 200
-
-    # prove preference: a dirtied working-tree file must NOT leak into
-    # the prior (restore in finally so the repo state is untouched)
-    original = open(detail_path, "rb").read() if os.path.exists(detail_path) else None
-    try:
-        with open(detail_path, "w") as f:
-            json.dump({"queries": {"sentinel_not_committed": 99.9}}, f)
-        dirtied, src2 = bench.load_prior(detail_path)
-        assert src2 == "committed"
-        assert "sentinel_not_committed" not in dirtied
-        assert dirtied == committed
-    finally:
-        if original is None:
-            os.unlink(detail_path)
-        else:
-            with open(detail_path, "wb") as f:
-                f.write(original)
-
-    # outside a checkout: fall back to working-tree with a LOUD source tag
-    other = tmp_path / "BENCH_DETAIL.json"
-    other.write_text(json.dumps({"queries": {"wt": 1.0}}))
-    wt, src3 = bench.load_prior(str(other))
-    assert (wt, src3) == ({"wt": 1.0}, "working-tree")
-    missing, src4 = bench.load_prior(str(tmp_path / "absent.json"))
-    assert (missing, src4) == ({}, "none")
-
-
 def test_bench_py_worker_warmup_runs_real_python_workers(spark):
     """The bench pre-loop fence must actually exercise the
     mapInPandas path (spinning up the Python worker pool), so the
@@ -665,121 +561,35 @@ def test_bench_py_worker_warmup_runs_real_python_workers(spark):
 
     assert job_ids(spark, lambda: bench._py_worker_warmup(spark), "py-worker-warmup-check")
     src = inspect.getsource(bench.main)
-    assert src.index("_py_worker_warmup(spark)") < src.index("canary_pre"), (
-        "the fence must run before the canary/timed loop"
+    assert src.index("_py_worker_warmup(spark)") < src.index("run_query("), (
+        "the fence must run before the timed loop"
     )
 
 
-def _basket_at(ratio: float) -> dict[str, float]:
-    import bench
-
-    return {n: round(pin * ratio, 4) for n, pin in bench.CANARY_BASKET.items()}
-
-
-def test_bench_suspect_canary_widens_reprobe_and_normalizes(tmp_path):
-    """Drift-aware bench (r12 verdict item 3, basket verdict since
-    r14): a basket-suspect run must (a) drop the re-probe trigger to
-    SUSPECT_REPROBE_RATIO with the raised cap, catching
-    globally-drifted queries the 2x bar misses, and (b) emit the
-    drift-normalized totals in the summary — quiet runs emit
-    neither."""
-    import json
+def test_bench_record_reads_the_query_jobs(spark):
+    """bench's per-query record over one real query: the job group's
+    jobs and the status-store totals perfbench.trace.spark_stats
+    reads. A change to that API fails here, not in a bench run."""
+    from pyspark.sql import functions as F
 
     import bench
 
-    prior = {"a": 1.0, "b": 4.0, "c": 2.0}
-    timings = {
-        "a": 1.5,   # 1.5x, +0.5s gap fails (==, not >) -> not flagged
-        "b": 5.8,   # 1.45x and +1.8s -> flagged ONLY when suspect
-        "c": 2.2,   # 1.1x -> never flagged
+    # without AQE the shuffle runs in one job, with no skipped stage
+    # for this session's status store (default retention) to evict
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        rec = bench.run_query(
+            spark,
+            lambda: spark.range(0, 10_000, 1, 4).groupBy((F.col("id") % 7).alias("k")).count(),
+            "bench-record-check",
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert set(rec) == {
+        "sec", "jobs", "stages", "tasks", "executor_run_ms", "executor_cpu_ms", "gc_ms",
+        "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes",
     }
-    assert bench.select_reprobes(timings, prior) == []
-    assert bench.select_reprobes(timings, prior, suspect=True) == ["b"]
-    # suspect cap honored
-    many = {f"q{i}": 2.0 for i in range(bench.SUSPECT_REPROBE_MAX + 5)}
-    sel = bench.select_reprobes(many, {k: 1.0 for k in many}, suspect=True)
-    assert len(sel) == bench.SUSPECT_REPROBE_MAX
-
-    detail = tmp_path / "BENCH_DETAIL.json"
-    # suspect run: every basket query solos at 1.5x its pin on PRE
-    line = json.loads(
-        bench.format_output(
-            timings, 0.1, str(detail),
-            basket=(_basket_at(1.5), _basket_at(1.0)),
-            prior=prior,
-        )
-    )
-    assert line["canary_verdict"] == "suspect"
-    assert line["canary_basket_pre_ratio"] == 1.5
-    assert line["suspect_source"] == "pre"
-    # quiet run: no normalized companion
-    line2 = json.loads(
-        bench.format_output(
-            timings, 0.1, str(detail),
-            basket=(_basket_at(1.0), _basket_at(1.0)),
-            prior=prior,
-        )
-    )
-    assert line2["canary_verdict"] == "quiet"
-    assert "drift_normalized_total" not in line2
-    assert "suspect_source" not in line2
-
-
-def test_bench_basket_verdict_median_and_drift_estimators(tmp_path):
-    """r13 verdict items 3+4: (a) the verdict is the MEDIAN trio
-    ratio — one family soloing high (its own plan changed, or one
-    unlucky GC) does NOT condemn the run; (b) on suspect runs the
-    PRIMARY `drift_normalized_total` is total / median-per-query
-    ratio vs the committed prior, with the basket-uniform model
-    demoted to `drift_normalized_total_basket_uniform`; (c) a
-    post-only suspect records suspect_source='post' (the ADVICE r13
-    reprobe-trigger asymmetry, now visible in the artifact)."""
-    import json
-
-    import bench
-
-    # (a) median vote: one hot family out of three -> still quiet
-    names = list(bench.CANARY_BASKET)
-    solos = _basket_at(1.0)
-    solos[names[0]] = round(bench.CANARY_BASKET[names[0]] * 3.0, 4)
-    assert bench.basket_ratio(solos) == 1.0
-    detail = tmp_path / "BENCH_DETAIL.json"
-    timings = {"a": 2.0, "b": 6.0, "c": 3.0}
-    prior = {"a": 1.0, "b": 4.0, "c": 2.0}  # ratios 2.0, 1.5, 1.5
-    line = json.loads(
-        bench.format_output(
-            timings, 0.1, str(detail),
-            basket=(solos, _basket_at(1.0)), prior=prior,
-        )
-    )
-    assert line["canary_verdict"] == "quiet"
-
-    # (b) suspect run: primary = total / median per-query ratio
-    line = json.loads(
-        bench.format_output(
-            timings, 0.1, str(detail),
-            basket=(_basket_at(1.4), _basket_at(1.6)), prior=prior,
-        )
-    )
-    assert line["canary_verdict"] == "suspect"
-    assert line["suspect_source"] == "both"
-    assert line["drift_median_query_ratio"] == 1.5
-    total = sum(timings.values())
-    assert line["drift_normalized_total"] == round(total / 1.5, 3)
-    assert line["drift_normalized_total_basket_uniform"] == round(total / 1.6, 3)
-
-    # (c) post-only suspect -> 'post'; and with NO prior the primary
-    # falls back to the basket-uniform estimate
-    line = json.loads(
-        bench.format_output(
-            timings, 0.1, str(detail),
-            basket=(_basket_at(1.0), _basket_at(1.5)),
-        )
-    )
-    assert line["canary_verdict"] == "suspect"
-    assert line["suspect_source"] == "post"
-    assert (
-        line["drift_normalized_total"]
-        == line["drift_normalized_total_basket_uniform"]
-        == round(total / 1.5, 3)
-    )
+    assert rec["jobs"] == 1 and rec["stages"] == 2 and rec["tasks"] >= 4 and rec["sec"] > 0
+    assert rec["shuffle_write_bytes"] > 0 and rec["shuffle_read_bytes"] > 0
+    assert all(isinstance(v, int) and v >= 0 for k, v in rec.items() if k != "sec")

@@ -1,6 +1,6 @@
 from __future__ import annotations
 
-from conftest import job_ids
+from joblink_etl_spark.profile import job_ids
 
 from joblink_etl_spark.schemas import (
     EXAMPLE_HEADER_ALIASES,

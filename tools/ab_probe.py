@@ -120,6 +120,7 @@ def main() -> None:
     import importlib
 
     from joblink_etl_spark.plans import registry
+    from joblink_etl_spark.profile import job_ids
     from joblink_etl_spark.session import get_spark
 
     spark = get_spark("ab_probe")
@@ -149,16 +150,14 @@ def main() -> None:
 
                 setattr(live, attr, old_fn)
         try:
-            sc = spark.sparkContext
-            sc.setJobGroup(tag, f"{name}:{arm}")
             t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+            jobs = job_ids(
+                spark, lambda: qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save(), tag
+            )
             dt = time.perf_counter() - t0
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            jobs = len(sc.statusTracker().getJobIdsForGroup(tag))
             spark.catalog.clearCache()
-            sc._jvm.System.gc()
-            return dt, jobs
+            spark.sparkContext._jvm.System.gc()
+            return dt, len(jobs)
         finally:
             for live, attr, fn in saved:
                 setattr(live, attr, fn)

@@ -83,14 +83,12 @@ def links(spark, n: int, partitions: int):
 
 def timed_jobs(spark, group: str, fn):
     """(seconds, Spark jobs, result) of fn() under one job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        t0 = time.perf_counter()
-        out = fn()
-        return time.perf_counter() - t0, len(sc.statusTracker().getJobIdsForGroup(group)), out
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    from joblink_etl_spark.profile import job_ids
+
+    out = []
+    t0 = time.perf_counter()
+    jobs = job_ids(spark, lambda: out.append(fn()), group)
+    return time.perf_counter() - t0, len(jobs), out[0]
 
 
 def codegen_compilations(spark) -> int:

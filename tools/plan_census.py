@@ -73,11 +73,13 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path[:0] = [REPO, os.path.join(REPO, "tests")]
+sys.path.insert(0, REPO)
 
-# the census's default scale and job bookkeeping are the test suite's,
-# so a census the CLI writes is the one the slow tier rebuilds
-from conftest import SF_SMALL, job_ids  # noqa: E402
+from joblink_etl_spark.profile import job_ids  # noqa: E402
+
+# the census's default scale is the test suite's, so a census the CLI
+# writes is the one the slow tier rebuilds
+from tests.conftest import SF_SMALL  # noqa: E402
 
 CENSUS_PATH = os.path.join(REPO, "PLAN_CENSUS.json")
 X100_DIR = os.path.join(REPO, ".scratch", "sf1x100p")
